@@ -28,11 +28,8 @@ import sys
 
 
 def _etl(args) -> int:
-    from .pipeline.species import (
-        load_cells_from_zips,
-        run_pipeline,
-        write_speciesdata,
-    )
+    from .pipeline.raster import decode_zips
+    from .pipeline.species import run_pipeline, split_errors, write_speciesdata
     from .session import get_spark
 
     # argument validation BEFORE the pipeline runs — a bad export
@@ -44,18 +41,21 @@ def _etl(args) -> int:
         )
         return 2
     spark = get_spark("species-range-etl")
-    cells, errors = load_cells_from_zips(spark, args.zips)
     thresholds = (
         [float(t) for t in args.thresholds.split(",")]
         if args.thresholds
         else None
     )
-    result = run_pipeline(cells, thresholds=thresholds)
-    # the lineage (zip parse -> polygonize -> dissolve) is expensive:
-    # materialize once so the sink write, the export, and the final
-    # count don't each replay it
-    result = result.persist()
+    # two stores, both released below.  The decoded frame (unzip +
+    # decode): the dissolve's sizing job fills it, and the result's
+    # lineage and the error collect read it, so the archives are scanned
+    # once per pass.  The result (dissolve, at one task per core): the
+    # sink write, the export and the final count read it.
+    decoded = decode_zips(spark, args.zips).persist()
+    cells, errors = split_errors(decoded)
+    result = None
     try:
+        result = run_pipeline(cells, thresholds=thresholds).persist()
         write_speciesdata(
             result,
             path=args.out,
@@ -72,7 +72,9 @@ def _etl(args) -> int:
         print(f"speciesdata rows: {n}; input errors: {len(err_rows)}")
         return 1 if (err_rows and args.strict) else 0
     finally:
-        result.unpersist()
+        decoded.unpersist()
+        if result is not None:
+            result.unpersist()
 
 
 def _export_vector(result, path: str, tolerance: float | None) -> None:

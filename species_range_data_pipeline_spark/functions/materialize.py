@@ -30,13 +30,17 @@ deliberate, centralized decision and not a default):
    the bm25/rrf ``dfreq`` join-backs) — the planner cannot infer it.
 3. **Release is GC-driven.** The blocks are freed by Spark's
    ContextCleaner when the RDD becomes unreachable and a JVM GC runs —
-   not at the end of the query.  Within one short-lived
-   session (bench / driver / tests) accumulation is bounded and
-   harmless; ``tests/test_checkpoint.py::test_materialize_once_blocks_bounded``
+   not at the end of the query — and that is the ONLY release path: the
+   checkpointed RDD is not reachable from the DataFrame API (``df.rdd``
+   builds a fresh RDD, so unpersisting it frees nothing).  Within one
+   short-lived session (bench / driver / tests) accumulation is bounded
+   and harmless; ``tests/test_checkpoint.py::test_materialize_once_blocks_bounded``
    pins that a loop of lane invocations does not grow block-manager
    storage without bound once references drop.  A long-lived service
-   should either drop frame references promptly (normal Python scoping
-   does) or call ``release()`` below when it holds frames open.
+   should drop frame references promptly (normal Python scoping does).
+   Where release must be deterministic, use ``df.persist()`` and
+   ``df.unpersist()`` instead, as the ``etl`` CLI does for its decoded
+   and result frames.
 
 ``eager=False`` everywhere: materialization happens inside the first
 action that consumes the frame — inside the timed region of every
@@ -55,12 +59,3 @@ def materialize_once(df: DataFrame) -> DataFrame:
     for the fault-tolerance / statistics / GC contract."""
     return df.localCheckpoint(eager=False)
 
-
-def release(df: DataFrame) -> None:
-    """Best-effort early release of a materialized frame's blocks
-    (otherwise GC-driven).  Safe to call on any DataFrame; a frame that
-    was never checkpointed/persisted is a no-op."""
-    try:
-        df.rdd.unpersist(False)
-    except Exception:
-        pass

@@ -29,14 +29,12 @@ from __future__ import annotations
 import math
 import struct
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from .raster import CELL_SCHEMA
+from .raster import _decode_members, parse_raster
 
 # TIFF field types -> (struct fmt char, byte size)
 _TYPES = {
@@ -530,55 +528,12 @@ def encode_geotiff(
 def decode_geotiff_members(members: DataFrame, name_col: str = "member") -> DataFrame:
     """GeoTIFF bytes -> long-format cell rows (same output as
     ``decode_ascii_members``); parse failures land in the error column."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _decode_batch(pdf, name_col, parse_geotiff)
-
-    return members.select(name_col, "content").mapInPandas(fn, CELL_SCHEMA)
+    return _decode_members(members, parse_geotiff, name_col)
 
 
 def decode_raster_members(members: DataFrame, name_col: str = "member") -> DataFrame:
-    """Format-sniffing decode: GeoTIFF magic -> TIFF parser, NetCDF magic
-    -> classic-CDF parser, anything else -> ASCII grid parser.  One lane
-    for a mixed archive (the reference's workspace holds `.asc` and
-    `.tif` side by side; climate projections routinely arrive as `.nc`)."""
-    from .netcdf import parse_netcdf
-    from .raster import parse_ascii_grid
-
-    def sniff(content: bytes):
-        if content[:2] in (b"II", b"MM") and len(content) >= 4:
-            return parse_geotiff(content)
-        if content[:3] == b"CDF" or content[:8] == b"\x89HDF\r\n\x1a\n":
-            return parse_netcdf(content)
-        return parse_ascii_grid(content)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _decode_batch(pdf, name_col, sniff)
-
-    return members.select(name_col, "content").mapInPandas(fn, CELL_SCHEMA)
-
-
-def _decode_batch(pdf: pd.DataFrame, name_col: str, parser) -> pd.DataFrame:
-    out = []
-    for name, blob in zip(pdf[name_col], pdf["content"]):
-        try:
-            header, cells = parser(bytes(blob))
-            xll = header.get("xllcorner", 0.0)
-            yll = header.get("yllcorner", 0.0)
-            cs = header.get("cellsize", 1.0)
-            nr = int(header.get("nrows", 0))
-            for r, c, v in cells:
-                out.append(
-                    {"file": name, "row": r, "col": c, "value": v,
-                     "xll": xll, "yll": yll, "cellsize": cs,
-                     "nrows": nr, "error": None}
-                )
-        except Exception as exc:  # decode failure -> error channel
-            out.append(
-                {"file": name, "row": None, "col": None, "value": None,
-                 "xll": None, "yll": None, "cellsize": None,
-                 "nrows": None, "error": f"{type(exc).__name__}: {exc}"}
-            )
-    return pd.DataFrame(out, columns=[f.name for f in CELL_SCHEMA.fields])
+    """Format-sniffing decode (``raster.parse_raster``): GeoTIFF, NetCDF
+    or ASCII grid per member.  One lane for a mixed archive (the
+    reference's workspace holds `.asc` and `.tif` side by side; climate
+    projections routinely arrive as `.nc`)."""
+    return _decode_members(members, parse_raster, name_col)

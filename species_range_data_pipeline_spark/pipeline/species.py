@@ -6,15 +6,22 @@ every stage.  Here the stages are a single DataFrame lineage — the barriers
 disappear (SURVEY.md §3), parallelism is task scheduling, and every former
 silent failure is an error-channel row.
 
-    zips (binaryFile) --expand_zip--> members --decode_ascii--> cell rows
+    zips (binaryFile) --decode_zips--> cell + error rows
+                                          (T1-T3: unzip and decode in ONE
+                                           Python call; stored once per pass)
       cells x thresholds[0.25,0.5,0.75]  (X1: literal explode, no join)
       filter value >= threshold           (F3)
       polygonize per (species,file,thr)   (T4: applyInPandas)
       filename -> attributes              (T6: column expressions)
-      dissolve by species+scenario key    (A1: cell-space union)
+      dissolve by species+scenario key    (A1: cell-space union, one
+                                           task per core)
       area                                (C1: shoelace, square degrees)
       sid                                 (P5: row_number over explicit order)
       sink                                (K1: parquet native / JDBC adapter)
+
+The ``etl`` CLI persists the decoded frame for the pass: the dissolve's
+sizing job fills the store, and the sink write and the error collect read
+the stored blocks, so the archives are scanned and decoded once.
 
 Attribute quirks preserved for parity with the reference: threshold rendered
 as the string "25"/"50"/"75" (``:190,200``), year stays a string (the
@@ -28,28 +35,26 @@ from pyspark.sql import functions as F
 
 from ..operators.polygonize import dissolve_auto, polygonize
 from .geotiff import decode_raster_members
-from .raster import expand_zip, read_binary_files
+from .raster import decode_zips, read_binary_files
 
 THRESHOLDS = [0.25, 0.5, 0.75]
+
+
+def split_errors(cells: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Decoded CELL_SCHEMA rows -> (cell rows, error rows (item, error))."""
+    errors = cells.where(F.col("error").isNotNull()).select(
+        F.col("file").alias("item"), "error"
+    )
+    return cells.where(F.col("error").isNull()), errors
 
 
 def load_cells_from_zips(spark: SparkSession, zip_dir: str) -> tuple[DataFrame, DataFrame]:
     """extract(): zip archives -> (cell rows, error rows).  Members may be
     ASCII grids or GeoTIFFs (the reference's workspace holds both,
-    ``species_range_etl.py:87-92``); the decoder sniffs per member."""
-    members = expand_zip(read_binary_files(spark, zip_dir, glob="*.zip"))
-    errors_zip = members.where(F.col("error").isNotNull()).select(
-        F.col("archive").alias("item"), "error"
-    )
-    rasters = members.where(
-        F.col("error").isNull() & F.col("member").rlike(r"\.(asc|txt|tif|tiff|nc)$")
-    )
-    cells = decode_raster_members(rasters)
-    errors_dec = cells.where(F.col("error").isNotNull()).select(
-        F.col("file").alias("item"), "error"
-    )
-    good = cells.where(F.col("error").isNull())
-    return good, errors_zip.unionByName(errors_dec)
+    ``species_range_etl.py:87-92``); the decoder sniffs per member.  Both
+    frames are filters of ONE ``decode_zips`` frame, so persisting that
+    frame (as the ``etl`` CLI does) makes one archive scan serve both."""
+    return split_errors(decode_zips(spark, zip_dir))
 
 
 def load_cells_from_dir(spark: SparkSession, raster_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -57,11 +62,7 @@ def load_cells_from_dir(spark: SparkSession, raster_dir: str) -> tuple[DataFrame
     files = read_binary_files(
         spark, raster_dir, glob="*.{asc,tif,tiff}"
     ).select(F.col("path").alias("member"), "content")
-    cells = decode_raster_members(files)
-    errors = cells.where(F.col("error").isNotNull()).select(
-        F.col("file").alias("item"), "error"
-    )
-    return cells.where(F.col("error").isNull()), errors
+    return split_errors(decode_raster_members(files))
 
 
 def parse_scenario_attributes(df: DataFrame, file_col: str = "file") -> DataFrame:
@@ -134,6 +135,10 @@ def run_pipeline(
         by=["species", "threshold", "source", "year", "scenario"],
         # grid georeferencing: all fixture rasters share the affine; per-file
         # affines would tile the group key (see operators/polygonize.py)
+        # An explicit repartition (shuffle origin REPARTITION_BY_NUM) spreads
+        # the groups over every core: AQE does not coalesce it, whereas the
+        # groupBy's own few-MB shuffle coalesces to ONE Python task.
+        num_partitions=cells.sparkSession.sparkContext.defaultParallelism,
     )
     # C1 (area already computed by the dissolve kernel in square units),
     # P4 (species_id surrogate from the component count stand-in) and

@@ -77,6 +77,7 @@ def test_pipeline_end_to_end(spark, zip_dir):
     cells, errors = load_cells_from_zips(spark, zip_dir)
     err_rows = errors.collect()
     assert len(err_rows) == 1 and "BadZipFile" in err_rows[0].error
+    assert err_rows[0].item.endswith("/broken.zip")  # the archive is named
 
     result = run_pipeline(cells)
     rows = result.collect()
@@ -150,6 +151,71 @@ def test_zip_bomb_member_rejected_per_member(spark, tmp_path, monkeypatch):
     assert "too large" in by_name["bomb.asc"].error
     assert by_name["bomb.asc"].content is None
     assert by_name["ok.asc"].error is None and by_name["ok.asc"].content
+
+    # the same guard through the one-pass decode: the over-cap member is an
+    # error row naming its archive, the healthy sibling still decodes
+    cells, errors = load_cells_from_zips(spark, str(d))
+    err_rows = errors.collect()
+    assert len(err_rows) == 1
+    assert err_rows[0].item.endswith("/a.zip")
+    assert "too large" in err_rows[0].error
+    assert {r.file for r in cells.select("file").distinct().collect()} == {"ok.asc"}
+    assert cells.count() == NROWS * NCOLS - 1  # one NODATA dropped
+
+
+def _new_stages(spark, floor: int) -> list:
+    """Status-store stages with an id above ``floor`` (the store lists
+    stages newest first)."""
+    jvm = spark._jvm
+    seq = spark.sparkContext._jsc.sc().statusStore().stageList(
+        None, False, False,
+        spark.sparkContext._gateway.new_array(jvm.double, 0),
+        jvm.java.util.ArrayList(),
+    )
+    stages = jvm.scala.jdk.javaapi.CollectionConverters.asJava(seq)
+    out = []
+    for i in range(stages.size()):
+        if stages.get(i).stageId() <= floor:
+            break
+        out.append(stages.get(i))
+    return out
+
+
+def test_cli_etl_scans_archives_once(spark, zip_dir, tmp_path, capsys):
+    """One etl pass reads the archives in exactly one stage: the decoded
+    frame is stored once, and the sizing job, the sink write and the
+    error collect all read the stored blocks."""
+    import os
+
+    from species_range_data_pipeline_spark.__main__ import main
+
+    zip_bytes = sum(
+        os.path.getsize(os.path.join(zip_dir, f))
+        for f in os.listdir(zip_dir) if f.endswith(".zip")
+    )
+    floor = max((s.stageId() for s in _new_stages(spark, -1)[:1]), default=-1)
+    assert main(["etl", "--zips", zip_dir, "--out", str(tmp_path / "out")]) == 0
+    assert "speciesdata rows: 9; input errors: 1" in capsys.readouterr().out
+    read = [s.inputBytes() for s in _new_stages(spark, floor)]
+    scans = [b for b in read if b and b % zip_bytes == 0]
+    assert scans == [zip_bytes], (zip_bytes, read)
+
+
+def test_run_pipeline_dissolve_runs_on_every_core(spark, zip_dir):
+    """The dissolve exchange is an explicit repartition at the session's
+    default parallelism; AQE does not coalesce that shuffle origin, so
+    the groups spread over every core instead of one Python task."""
+    import re
+
+    cells, _ = load_cells_from_zips(spark, zip_dir)
+    plan = run_pipeline(cells)._jdf.queryExecution().executedPlan().toString()
+    exchanges = re.findall(
+        r"Exchange hashpartitioning\(species#\d+, threshold#\d+, source#\d+, "
+        r"year#\d+, scenario#\d+, (\d+)\), (\w+)",
+        plan,
+    )
+    n = spark.sparkContext.defaultParallelism
+    assert exchanges == [(str(n), "REPARTITION_BY_NUM")], plan
 
 
 def test_full_artifact_cycle_mixed_raster_formats(spark, tmp_path):
