@@ -74,58 +74,61 @@ _MODULE_NAMES = [
 # first-rows went green, so the floor is now r14 — the window is the
 # flagship sentinel plus the stalest-first r14/r15 tranche with the
 # module fillers the builder resolved (media/bpe/scalar).
-_WINDOW_BUILT_FROM = 18  # newest CORRECTNESS artifact consumed
+# r20 rotation (built from CORRECTNESS_r01..r19): the r14 tranche went
+# green in r19, so the floor moves to r15; the r16-r18 rows are the
+# builder's module fillers and stalest-first tail.
+_WINDOW_BUILT_FROM = 19  # newest CORRECTNESS artifact consumed
 _PRIORITY = [
-    "flagship_threshold_rollup",  # r18 (relational)
-    "agg_count_if_bool",  # r14 (stats)
-    "agg_salted_twophase",  # r14 (advanced)
-    "agg_string_concat",  # r14 (stats)
-    "ann_ivf_topk",  # r14 (vectors)
-    "geo_shapefile_roundtrip",  # r14 (geo)
-    "join_full_outer",  # r14 (relational)
-    "join_semi",  # r14 (relational)
-    "join_skew_salted",  # r14 (advanced)
-    "q10_returned_revenue",  # r14 (advanced)
-    "q13_customer_distribution",  # r14 (tpch_extra)
-    "q15_top_supplier",  # r14 (tpch_extra)
-    "q16_supplier_part_relationship",  # r14 (tpch_extra)
-    "q17_small_quantity_revenue",  # r14 (tpch_extra)
-    "q20_excess_shipments",  # r14 (tpch_extra)
-    "q22_dormant_customers",  # r14 (tpch_extra)
-    "q3_shipping_priority",  # r14 (relational)
-    "q5_region_volume",  # r14 (relational)
-    "q6_revenue_delta",  # r14 (advanced)
-    "q8_market_share",  # r14 (tpch_extra)
-    "scd2_customer_history",  # r14 (mining)
-    "scrape_pipeline_live",  # r14 (relational)
-    "setop_except",  # r14 (relational)
-    "setop_intersect",  # r14 (relational)
-    "sketch_quantile_bottomk",  # r14 (stats)
-    "sort_limit_topk",  # r14 (relational)
-    "stream_tumbling_counts",  # r14 (events)
-    "text_bigram_lm",  # r14 (text)
-    "text_chunk_udtf",  # r14 (text)
-    "text_compression_ratio",  # r14 (quality)
-    "text_perplexity",  # r14 (text)
-    "text_pii_scrub",  # r14 (quality)
-    "text_quality_classifier",  # r14 (text)
-    "text_repetition",  # r14 (text)
-    "window_udaf_ewma",  # r14 (events)
-    "graph_triangles",  # r15 (graph)
-    "retrieval_mmr_auto",  # r15 (retrieval)
-    "json_funcs",  # r15 (scalar)
-    "subtitle_cue_stats",  # r16 (media)
-    "bpe_encode_tokens",  # r17 (bpe)
-    "agg_rollup",  # r15 (relational)
-    "cdf_row_changes",  # r15 (stats)
-    "doc_pack_sequences",  # r15 (packing)
-    "doc_quality_funnel",  # r15 (quality)
-    "emb_dedup_components",  # r15 (vectors)
-    "ev_funnel",  # r15 (advanced)
-    "ev_retention_cohorts",  # r15 (events)
-    "ev_sessionization",  # r15 (events)
-    "ev_tumbling",  # r15 (events)
-    "geo_dissolve_area",  # r15 (geo)
+    "flagship_threshold_rollup",  # r19 (relational)
+    "agg_distinct",  # r15 (relational)
+    "agg_entropy_gini",  # r15 (stats)
+    "agg_grouping_sets",  # r15 (advanced)
+    "agg_having",  # r15 (relational)
+    "agg_percentiles",  # r15 (advanced)
+    "geo_polygonize_components",  # r15 (geo)
+    "geo_spatial_join_bin",  # r15 (geo)
+    "join_asof",  # r15 (advanced)
+    "join_interval_overlap",  # r15 (relational)
+    "join_lateral_topk",  # r15 (relational)
+    "join_left_counts",  # r15 (relational)
+    "join_range_bands",  # r15 (advanced)
+    "merge_upsert",  # r15 (stats)
+    "pivot_wide_status",  # r15 (advanced)
+    "q21_suppliers_kept_waiting",  # r15 (tpch_extra)
+    "q2_top_supplier_per_nation",  # r15 (tpch_extra)
+    "q9_product_type_profit",  # r15 (tpch_extra)
+    "sample_stratified",  # r15 (quality)
+    "setop_union_distinct",  # r15 (relational)
+    "sky_pareto_front",  # r15 (mining)
+    "sort_nulls_ordering",  # r15 (relational)
+    "stream_dedup_replayed",  # r15 (events)
+    "stream_interval_join",  # r15 (events)
+    "stream_manifest_tail",  # r15 (events)
+    "stream_ohlc_flush",  # r15 (events)
+    "stream_session_flush",  # r15 (events)
+    "stream_stateful_totals",  # r15 (events)
+    "subq_above_nation_avg",  # r15 (advanced)
+    "subq_exists_late_lines",  # r15 (advanced)
+    "text_decontaminate_purge_external",  # r15 (text)
+    "warc_ingest_roundtrip",  # r15 (text)
+    "webdataset_roundtrip",  # r15 (text)
+    "window_anomaly_zscore",  # r15 (advanced)
+    "window_rank_dense",  # r15 (relational)
+    "hier_rollup",  # r16 (graph)
+    "retrieval_rrf_fusion",  # r16 (retrieval)
+    "multimodal_ahash_dups",  # r17 (media)
+    "bpe_train_merges",  # r18 (bpe)
+    "basket_brand_pairs",  # r16 (mining)
+    "date_funcs",  # r16 (scalar)
+    "dedup_ngram_jaccard",  # r16 (text)
+    "delta_read_snapshot",  # r16 (stats)
+    "doc_pack_sequences_sharded",  # r16 (packing)
+    "dq_checks",  # r16 (quality)
+    "emb_dedup_components_lsh",  # r16 (vectors)
+    "emb_near_dup_bruteforce",  # r16 (vectors)
+    "emb_norms",  # r16 (vectors)
+    "ev_gapfill",  # r16 (events)
+    "ev_ohlc_bars",  # r16 (events)
 ]
 
 # Queries whose oracles are pure VALUES restatements of expected OUTPUT

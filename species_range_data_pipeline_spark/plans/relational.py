@@ -250,9 +250,17 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where((F.col("o_orderdate") < cutoff) & (F.col("l_shipdate") > cutoff))
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
+            # exact DECIMAL sum, so rounding at a .005 boundary agrees
+            # with the oracle; the double cast keeps the output schema
             F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
+                F.sum(
+                    F.col("l_extendedprice").cast("decimal(15,2)")
+                    * (1 - F.col("l_discount").cast("decimal(15,2)"))
+                ),
+                2,
+            )
+            .cast("double")
+            .alias("revenue")
         )
         .select(
             "l_orderkey",
@@ -267,7 +275,9 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q3_ORACLE = """
 SELECT l_orderkey,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                      * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2)
+            AS DOUBLE) AS revenue,
        strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
        o_orderpriority
 FROM lineitem

@@ -1,208 +1,102 @@
 """Streaming CHANGE-DATA-FEED source over a FOREIGN Delta log.
 
 ``sources/delta_stream.py`` tails a foreign ``_delta_log`` as an
-append-only stream (change commits fail or skip); production consumers
-also want the readChangeFeed-shaped stream: every row-level insert and
-delete, including the ones DML rewrites imply (VERDICT r17 next #7).
-This module composes the batch feed's multiset-diff algebra
-(``delta_log.read_delta_changes``) with the version-offset streaming
-source shape, on Spark 4's Python streaming data source API:
+append-only stream; production consumers also want the
+readChangeFeed-shaped stream: every row-level insert and delete,
+including the ones DML rewrites imply (VERDICT r17 next #7).  This
+module replays the batch feed's multiset-diff algebra
+(``delta_log.read_delta_changes``) on the shared change-feed contract
+(``sources/log_tail.py``):
 
     register_delta_cdf_stream_source(spark)
     stream = (spark.readStream.format("delta_cdf_tail")
               .option("path", tbl).load())
 
-- **Offsets are commit versions** (the ``delta_tail`` contract): a
-  microbatch covers the version steps in ``(start, end]``; commit
-  JSONs are immutable, so a batch replayed from the checkpoint after a
-  crash recomputes exactly the same change rows — exactly-once with an
-  idempotent sink.
-- **Output schema** is the table's columns plus ``_change_type``
-  ('insert' | 'delete') and ``_commit_version`` — the batch feed's
-  shape, so the two are interchangeable downstream.
+- **Offsets are commit versions** (the ``delta_tail`` offsets); the
+  version column is ``_commit_version`` (int).
 - **Step semantics match the batch feed exactly**: each step diffs the
-  live (path, DV uid) sets; pure appends stream the added files
-  vectorized (one Spark task per file, Arrow batches straight
-  through); pure removals stream the dropped files as deletes;
-  rewrites (remove+add in one step) fold to ONE task that reads both
-  sides and emits the NET multiset difference, so an UPDATE surfaces
-  as delete-of-pre-image + insert-of-post-image and a deletion-vector
-  rewrite surfaces exactly its newly-masked rows (carried rows
-  cancel).  Metadata-only and ``dataChange=false`` (compaction) steps
-  emit nothing and are skipped driver-side without reading a file.
+  live (path, DV uid) sets of the two replayed snapshots, so a
+  deletion-vector rewrite surfaces exactly its newly masked rows.
+  Metadata-only and ``dataChange=false`` (compaction) steps emit
+  nothing and are skipped driver-side without replaying a snapshot.
 - **Deletion vectors are applied in the per-file reader** (pure-Python
   ``dv.py`` decode + row-index mask — no Spark plan needed inside the
   data source worker).
 - Boundaries, loud: column-mapped tables are refused (the batch feed
-  resolves mapping; this per-file reader does not), MapType columns
-  cannot be multiset-diffed, a file holding columns the stream schema
-  lacks is an out-of-spec rename/drop, and a vacuumed version inside
-  the range raises rather than gapping.
+  resolves mapping; this per-file reader does not), a file holding
+  columns the stream schema lacks is an out-of-spec rename/drop, and a
+  vacuumed version inside the range raises rather than gapping.
 
 At scale the driver work per batch is two log replays per step
 (log-sized); read work is the files each step touched — the feed costs
-the day's churn, never the table.  The one-task rewrite fold is the
-honest cut for now: its inputs are commit-scoped by the MoR contract.
+the day's churn, never the table.
 """
 
 from __future__ import annotations
 
-import json
 import os
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
 
-from .delta_stream import _refuse_column_mapping
-from .delta_log import (
-    _check_protocol,
-    _dv_uid,
-    _replay,
-    _scan_log_dir,
-    _typed_partition_value,
+from .delta_log import _check_protocol, _dv_uid, _replay
+from .delta_stream import DeltaTailStreamReader, _refuse_column_mapping
+from .log_tail import (
+    ChangeStep,
+    FileSpec,
+    LogTailSource,
+    cdf_schema,
+    change_partitions,
 )
 
 _GONE = object()
 
 
 def _cdf_schema(table_schema):
-    from pyspark.sql.types import (
-        IntegerType,
-        MapType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import IntegerType, StructField
 
-    if any(isinstance(f.dataType, MapType) for f in table_schema.fields):
-        raise NotImplementedError(
-            "change feed needs multiset-diff over all columns; MapType"
-            " columns are not comparable — drop or cast the map column"
-        )
-    return StructType(
-        [
-            *table_schema.fields,
-            StructField("_change_type", StringType(), False),
-            StructField("_commit_version", IntegerType(), False),
-        ]
+    return cdf_schema(
+        table_schema, StructField("_commit_version", IntegerType(), False)
     )
 
 
-class _CdfFileSpec:
-    """One data file of a step side, with everything the executor-side
-    reader needs: absolute path, partition values, DV descriptor."""
+class DeltaCdfTailStreamReader(DeltaTailStreamReader):
+    format_name = "delta_cdf_tail"
+    _rename_drop = (
+        "the stream schema; without column mapping only ADD COLUMN is"
+        " legal evolution — rename/drop cannot be resolved here."
+    )
 
-    def __init__(self, fpath: str, pvalues: dict, dv: dict | None):
-        self.fpath = fpath
-        self.pvalues = pvalues
-        self.dv = dv
-
-
-class _CdfFiles(InputPartition):
-    """A pure insert/delete step file: vectorized single-file read."""
-
-    def __init__(self, table: str, version: int, schema_json: str,
-                 ctype: str, spec: _CdfFileSpec):
-        self.table = table
-        self.version = version
-        self.schema_json = schema_json
-        self.ctype = ctype
-        self.spec = spec
-
-
-class _CdfDiff(InputPartition):
-    """A rewrite step: both sides fold to one net multiset diff."""
-
-    def __init__(self, table: str, version: int, schema_json: str,
-                 removed: list[_CdfFileSpec], added: list[_CdfFileSpec]):
-        self.table = table
-        self.version = version
-        self.schema_json = schema_json
-        self.removed = removed
-        self.added = added
-
-
-class DeltaCdfTailDataSource(DataSource):
-    """Foreign Delta log as a streaming CDF source (``delta_cdf_tail``)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "delta_cdf_tail"
-
-    def schema(self):
-        from pyspark.sql.types import StructType
-
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("delta_cdf_tail requires .option('path', ...)")
-        snap = _replay(path)
-        _refuse_column_mapping(snap.get("configuration"), path)
-        return _cdf_schema(
-            StructType.fromJson(json.loads(snap["schema_json"]))
-        )
-
-    def streamReader(self, schema) -> "DeltaCdfTailStreamReader":
-        return DeltaCdfTailStreamReader(self.options, schema)
-
-
-class DeltaCdfTailStreamReader(DataSourceStreamReader):
-    def __init__(self, options, schema):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("delta_cdf_tail requires .option('path', ...)")
-        starting = options.get("startingVersion")
-        if starting is None:
-            self._first = 0
-        elif str(starting).lower() == "latest":
-            versions, _ = _scan_log_dir(self._path)
-            self._first = (versions[-1] + 1) if versions else 0
-        else:
-            self._first = int(starting)
-        self._schema_json = schema.json()
-
-    def initialOffset(self) -> dict:
-        return {"version": self._first - 1}
-
-    def latestOffset(self) -> dict:
-        versions, _ = _scan_log_dir(self._path)
-        if not versions:
-            raise ValueError(f"no JSON commit at {self._path}")
-        return {"version": versions[-1]}
+    @staticmethod
+    def stream_schema(path: str):
+        return _cdf_schema(DeltaTailStreamReader.stream_schema(path))
 
     def _data_changed(self, v: int) -> bool:
         """Does version v's commit JSON carry any dataChange action?
         (Compaction and metadata-only commits net to zero by
         definition — skipped without replaying a snapshot.)"""
-        fp = os.path.join(self._path, "_delta_log", f"{v:020d}.json")
-        if not os.path.exists(fp):
-            raise ValueError(
-                f"version {v} of {self._path} has no JSON commit"
-                " (vacuumed past a checkpoint?); restart the stream from"
-                " a readable version"
-            )
-        with open(fp) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "protocol" in action:
-                    _check_protocol(action["protocol"], self._path)
-                for kind in ("add", "remove"):
-                    if kind in action and action[kind].get(
-                        "dataChange", True
-                    ):
-                        return True
+        actions = self._commit_actions(v, restart="from a readable version")
+        for action in actions:
+            if "protocol" in action:
+                _check_protocol(action["protocol"], self._path)
+            for kind in ("add", "remove"):
+                if kind in action and action[kind].get("dataChange", True):
+                    return True
         return False
 
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
+    def _spec(self, snap: dict, rel: str) -> FileSpec:
+        add = snap["live"][rel]
+        pv = add.get("partitionValues") or {}
+        dv = add.get("deletionVector")
+        return FileSpec(
+            os.path.join(self._path, rel),
+            {c: pv.get(c) for c in snap["partition_cols"]},
+            dv if dv and dv.get("storageType") else None,
+        )
+
+    def partitions(self, start: dict, end: dict) -> Sequence[ChangeStep]:
         lo, hi = int(start["version"]), int(end["version"])
-        parts: list[InputPartition] = []
+        parts: list[ChangeStep] = []
         after = None
         for v in range(lo + 1, hi + 1):
             if not self._data_changed(v):
@@ -223,171 +117,18 @@ class DeltaCdfTailStreamReader(DataSourceStreamReader):
             added = sorted(
                 r for r, u in a_uid.items() if b_uid.get(r, _GONE) != u
             )
-            if not removed and not added:
-                continue
-
-            def _spec(snap, rel) -> _CdfFileSpec:
-                add = snap["live"][rel]
-                pv = add.get("partitionValues") or {}
-                dv = add.get("deletionVector")
-                return _CdfFileSpec(
-                    os.path.join(self._path, rel),
-                    {c: pv.get(c) for c in snap["partition_cols"]},
-                    dv if dv and dv.get("storageType") else None,
-                )
-
-            if removed and added:
-                parts.append(
-                    _CdfDiff(
-                        self._path,
-                        v,
-                        self._schema_json,
-                        [_spec(before, r) for r in removed],
-                        [_spec(after, r) for r in added],
-                    )
-                )
-            else:
-                ctype = "insert" if added else "delete"
-                snap = after if added else before
-                for rel in added or removed:
-                    parts.append(
-                        _CdfFiles(
-                            self._path,
-                            v,
-                            self._schema_json,
-                            ctype,
-                            _spec(snap, rel),
-                        )
-                    )
+            parts += change_partitions(
+                v,
+                [self._spec(before, r) for r in removed],
+                [self._spec(after, r) for r in added],
+            )
         return parts
 
-    # -- executor side -----------------------------------------------
 
-    def _load_side(self, table: str, spec: _CdfFileSpec, data_schema):
-        """One file -> pyarrow Table under the stream's TABLE columns
-        (padding legal ADD-evolution gaps, refusing rename/drop),
-        partition values restored, DV mask applied."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+class DeltaCdfTailDataSource(LogTailSource):
+    """Foreign Delta log as a streaming CDF source (``delta_cdf_tail``)."""
 
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from .dv import decode_rbm_array, load_dv_bytes
-
-        types = {f.name: f.dataType for f in data_schema.fields}
-        target = to_arrow_schema(data_schema)
-        raw = pq.read_table(spec.fpath)
-        allowed = {f.name for f in data_schema.fields}
-        unknown = [n for n in raw.column_names if n not in allowed]
-        if unknown:
-            raise NotImplementedError(
-                f"data file {spec.fpath!r} holds column(s) {unknown}"
-                " absent from the stream schema; without column mapping"
-                " only ADD COLUMN is legal evolution — rename/drop"
-                " cannot be resolved here."
-            )
-        if spec.dv is not None:
-            positions = decode_rbm_array(
-                load_dv_bytes(table, spec.dv)
-            )
-            keep = np.ones(raw.num_rows, dtype=bool)
-            inside = positions[positions < raw.num_rows].astype(np.int64)
-            keep[inside] = False
-            raw = raw.filter(pa.array(keep))
-        cols = []
-        for field in target:
-            if field.name in spec.pvalues:
-                tv = _typed_partition_value(
-                    spec.pvalues[field.name], types[field.name]
-                )
-                cols.append(
-                    pa.array([tv] * raw.num_rows).cast(field.type)
-                    if tv is not None
-                    else pa.nulls(raw.num_rows, field.type)
-                )
-            elif field.name in raw.column_names:
-                cols.append(raw.column(field.name).cast(field.type))
-            else:
-                cols.append(pa.nulls(raw.num_rows, field.type))
-        return pa.Table.from_arrays(cols, schema=target)
-
-    def read(self, partition) -> Iterator:
-        import pyarrow as pa
-
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
-
-        out_schema = StructType.fromJson(json.loads(partition.schema_json))
-        data_schema = StructType(out_schema.fields[:-2])
-        target = to_arrow_schema(out_schema)
-
-        def _with_cdf(tbl, ctype: str, version: int):
-            n = tbl.num_rows
-            return pa.Table.from_arrays(
-                [
-                    *[tbl.column(f.name) for f in data_schema.fields],
-                    pa.array([ctype] * n, pa.string()),
-                    pa.array([version] * n, pa.int32()),
-                ],
-                schema=target,
-            )
-
-        if isinstance(partition, _CdfFiles):
-            tbl = self._load_side(
-                partition.table, partition.spec, data_schema
-            )
-            yield from _with_cdf(
-                tbl, partition.ctype, partition.version
-            ).to_batches()
-            return
-
-        # rewrite step: net multiset diff of both sides, exact (no
-        # float coercion — rows are frozen to hashable tuples)
-        from collections import Counter
-
-        def _freeze(v):
-            if isinstance(v, list):
-                return ("__list__", tuple(_freeze(x) for x in v))
-            if isinstance(v, dict):
-                return (
-                    "__struct__",
-                    tuple((k, _freeze(x)) for k, x in sorted(v.items())),
-                )
-            return v
-
-        def _thaw(v):
-            if isinstance(v, tuple) and len(v) == 2 and v[0] == "__list__":
-                return [_thaw(x) for x in v[1]]
-            if isinstance(v, tuple) and len(v) == 2 and v[0] == "__struct__":
-                return {k: _thaw(x) for k, x in v[1]}
-            return v
-
-        net: Counter = Counter()
-        for sign, specs in ((-1, partition.removed), (1, partition.added)):
-            for spec in specs:
-                tbl = self._load_side(partition.table, spec, data_schema)
-                for row in tbl.to_pylist():
-                    key = tuple(
-                        _freeze(row[f.name]) for f in data_schema.fields
-                    )
-                    net[key] += sign
-        names = [f.name for f in data_schema.fields]
-        rows = []
-        for key, n in sorted(
-            net.items(), key=lambda kv: repr(kv[0])
-        ):
-            if n == 0:
-                continue
-            base = {c: _thaw(v) for c, v in zip(names, key)}
-            base["_change_type"] = "insert" if n > 0 else "delete"
-            base["_commit_version"] = partition.version
-            rows.extend([base] * abs(n))
-        if rows:
-            yield from pa.Table.from_pylist(rows, schema=target).to_batches()
-
-    def commit(self, end: dict) -> None:
-        pass
+    reader = DeltaCdfTailStreamReader
 
 
 def register_delta_cdf_stream_source(spark: SparkSession) -> None:

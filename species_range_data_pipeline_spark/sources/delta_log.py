@@ -879,35 +879,36 @@ def _read_files(
     # disjoint file sets), so the mask never taxes rows that have no
     # mask to check; it applies on the raw scan because the _metadata
     # columns it keys on live only there, before partition restore.
+    def _scan(fs):
+        # the partition-restore key is read on the RAW scan: taken after
+        # the mask's Python UDF, input_file_name() no longer tracks the
+        # row's file and rows pick up another file's partition values
+        scan = spark.read.schema(data_schema).parquet(*fs)
+        if pcols:
+            scan = scan.withColumn("__delta_file", decoded_file_basename())
+        return scan
+
     dv_files: dict[str, dict] = {}
     for f in files:
         dvd = adds_by_rel[os.path.relpath(f, path)].get("deletionVector")
         if dvd and dvd.get("storageType"):
             dv_files[f] = dvd
     if not dv_files:
-        df = spark.read.schema(data_schema).parquet(*files)
+        df = _scan(files)
     else:
         # blob-map keys are ABSOLUTE paths (ADVICE r17: a relative table
         # path made the keys relative while the scan's
         # _metadata.file_path is always absolute — every lookup missed)
         dv_map = {os.path.abspath(f): d for f, d in dv_files.items()}
         masked = _apply_deletion_vectors(
-            spark,
-            spark.read.schema(data_schema).parquet(*sorted(dv_files)),
-            path,
-            dv_map,
+            spark, _scan(sorted(dv_files)), path, dv_map
         )
         clean = [f for f in files if f not in dv_files]
-        df = (
-            masked
-            if not clean
-            else spark.read.schema(data_schema)
-            .parquet(*clean)
-            .unionByName(masked)
-        )
+        df = masked if not clean else _scan(clean).unionByName(masked)
     if mapping:
         df = df.select(
-            *[F.col(phys(f.name)).alias(f.name) for f in data_fields]
+            *[F.col(phys(f.name)).alias(f.name) for f in data_fields],
+            *(["__delta_file"] if pcols else []),
         )
 
     if pcols:
@@ -935,8 +936,7 @@ def _read_files(
         pv_df = spark.createDataFrame(pv_rows, pv_schema)
         types = {f.name: f.dataType for f in schema.fields}
         df = (
-            df.withColumn("__delta_file", decoded_file_basename())
-            .join(F.broadcast(pv_df), "__delta_file")
+            df.join(F.broadcast(pv_df), "__delta_file")
             .select(
                 *[
                     F.col(f"__pv_{c}").cast(types[c]).alias(c)

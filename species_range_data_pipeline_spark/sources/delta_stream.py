@@ -1,54 +1,38 @@
 """Streaming source over a FOREIGN Delta log: version-offset tailing.
 
 ``sources/manifest_stream.py`` tails the engine's own table format;
-this module is the same Delta-streaming-source shape pointed at an
-external ``_delta_log`` (VERDICT r16 next #7), on Spark 4's Python
-streaming data source API:
+this module points the shared tail contract (``sources/log_tail.py``)
+at an external ``_delta_log`` (VERDICT r16 next #7):
 
     register_delta_stream_source(spark)
     stream = spark.readStream.format("delta_tail").option("path", tbl).load()
 
-- **Offsets are commit versions.**  ``latestOffset`` is the newest
-  JSON-visible version; a microbatch covers the versions in
-  ``(start, end]`` and its input partitions are exactly the data files
-  those commits ADDED with ``dataChange=true`` — one Spark task per
-  file, never a table rescan.  Commit JSONs are immutable, so a batch
-  replayed from the checkpoint after a crash re-reads precisely the
-  same rows: exactly-once end-to-end with an idempotent sink.
-- **Append-only contract, explicitly.**  A version that removed files
-  with ``dataChange=true``, or added a file carrying a deletion
-  vector (DML rewrites always do one of these), is not representable
-  as an insert-only stream: default is a loud failure;
-  ``.option("skipChangeCommits", "true")`` ignores those versions —
-  Delta's own knob and name.  Compaction commits (``dataChange=false``
-  on both sides) contribute nothing and are skipped silently, exactly
-  like Delta's source.  Row-level change consumption is the batch
+- **Offsets are commit versions**; a batch's files are those the
+  commit JSONs ADDED with ``dataChange=true``.
+- **Change commits** removed files with ``dataChange=true`` or added a
+  file carrying a deletion vector (DML rewrites always do one of
+  these).  Compaction commits (``dataChange=false`` on both sides)
+  contribute nothing and are skipped silently, exactly like Delta's
+  source.  Row-level change consumption is the batch
   ``read_delta_changes`` feed's job.
 - **Partition columns are restored per file** from the add action's
-  ``partitionValues`` (typed at read); files written before a column
-  was appended are null-padded to the committed schema, matching the
-  batch read path.
-- Versions whose JSON was vacuumed away inside the requested range
-  raise (a checkpoint is a snapshot, not a step history) — never a
-  silent gap.
-
-At scale the planner work per batch is parsing the new commit JSONs on
-the driver (log-sized) and the read work is the files each commit
-landed — tailing a 100 TB table costs the day's appends, not the table.
+  ``partitionValues``; the partition-column list is seeded from the
+  snapshot at the batch-start version and advanced by in-range
+  ``metaData`` actions.  Each in-range ``protocol``/``metaData`` action
+  is checked.
+- Boundaries, loud: column-mapped tables are refused, a file holding a
+  column the committed schema lacks is an out-of-spec rename/drop, and
+  versions whose JSON was vacuumed away inside the requested range
+  raise (a checkpoint is a snapshot, not a step history).
 """
 
 from __future__ import annotations
 
 import json
 import os
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
 
 from .delta_log import (
     _check_metadata,
@@ -56,8 +40,8 @@ from .delta_log import (
     _dv_uid,
     _replay,
     _scan_log_dir,
-    _typed_partition_value,
 )
+from .log_tail import FileSpec, LogTailReader, LogTailSource, drop_positions
 
 
 def _refuse_column_mapping(configuration: dict | None, path: str) -> None:
@@ -74,87 +58,49 @@ def _refuse_column_mapping(configuration: dict | None, path: str) -> None:
         )
 
 
-class _DeltaFile(InputPartition):
-    def __init__(self, path: str, schema_json: str, pvalues: dict):
-        self.path = path
-        self.schema_json = schema_json
-        self.pvalues = pvalues  # partition column -> string-serialized value
+class DeltaTailStreamReader(LogTailReader):
+    format_name = "delta_tail"
+    empty_log = "no JSON commit at"
+    # the unknown-column refusal's reason, after "absent from "
+    _rename_drop = (
+        "the committed schema; without column mapping only ADD COLUMN is"
+        " legal evolution, so this is a rename/drop this reader cannot"
+        " resolve."
+    )
 
+    def __init__(self, options, schema):
+        super().__init__(options, schema)
+        self._pcols: list[str] | None = None  # lazily resolved
 
-class DeltaTailDataSource(DataSource):
-    """Foreign Delta log as a streaming source (format ``delta_tail``)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "delta_tail"
-
-    def schema(self):
+    @staticmethod
+    def stream_schema(path: str):
         from pyspark.sql.types import StructType
 
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("delta_tail requires .option('path', ...)")
         snap = _replay(path)
         _refuse_column_mapping(snap.get("configuration"), path)
         return StructType.fromJson(json.loads(snap["schema_json"]))
 
-    def streamReader(self, schema) -> "DeltaTailStreamReader":
-        return DeltaTailStreamReader(self.options, schema)
+    def positions(self) -> list[int]:
+        return _scan_log_dir(self._path)[0]
 
-
-class DeltaTailStreamReader(DataSourceStreamReader):
-    def __init__(self, options, schema):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("delta_tail requires .option('path', ...)")
-        self._skip_changes = (
-            str(options.get("skipChangeCommits", "false")).lower() == "true"
-        )
-        starting = options.get("startingVersion")
-        if starting is None:
-            self._first = 0
-        elif str(starting).lower() == "latest":
-            # consume only commits made AFTER the stream starts; resolved
-            # once at construction (the r10 initialOffset-pin rule) so a
-            # checkpointed restart keeps it
-            versions, _ = _scan_log_dir(self._path)
-            self._first = (versions[-1] + 1) if versions else 0
-        else:
-            self._first = int(starting)
-        self._schema_json = schema.json()
-        self._pcols: list[str] | None = None  # lazily resolved
-
-    def initialOffset(self) -> dict:
-        # the offset names the last CONSUMED version; the first batch
-        # therefore covers versions >= startingVersion
-        return {"version": self._first - 1}
-
-    def latestOffset(self) -> dict:
-        versions, _ = _scan_log_dir(self._path)
-        if not versions:
-            raise ValueError(f"no JSON commit at {self._path}")
-        return {"version": versions[-1]}
-
-    def _commit_actions(self, v: int) -> list[dict]:
-        log_dir = os.path.join(self._path, "_delta_log")
-        fp = os.path.join(log_dir, f"{v:020d}.json")
+    def _commit_actions(
+        self,
+        v: int,
+        restart: str = "with a fresh checkpoint from a readable version",
+    ) -> list[dict]:
+        fp = os.path.join(self._path, "_delta_log", f"{v:020d}.json")
         if not os.path.exists(fp):
             raise ValueError(
                 f"version {v} of {self._path} has no JSON commit (vacuumed"
-                " past a checkpoint?); restart the stream with a fresh"
-                " checkpoint from a readable version"
+                f" past a checkpoint?); restart the stream {restart}"
             )
-        actions = []
         with open(fp) as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    actions.append(json.loads(line))
-        return actions
+            return [json.loads(line) for line in fh if line.strip()]
 
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
+    def partitions(self, start: dict, end: dict) -> Sequence[FileSpec]:
+        from urllib.parse import unquote
+
         lo, hi = int(start["version"]), int(end["version"])
-        parts: list[InputPartition] = []
         if self._pcols is None:
             # seed from the snapshot at the batch-START version, not
             # LATEST (ADVICE r17): a stream starting mid-log must
@@ -163,12 +109,11 @@ class DeltaTailStreamReader(DataSourceStreamReader):
             # in-range metaData actions below then advance it in step)
             if lo >= 0:
                 seed = _replay(self._path, version=lo)
-                _refuse_column_mapping(
-                    seed.get("configuration"), self._path
-                )
+                _refuse_column_mapping(seed.get("configuration"), self._path)
                 self._pcols = seed["partition_cols"]
             else:
                 self._pcols = []
+        parts: list[FileSpec] = []
         for v in range(lo + 1, hi + 1):
             adds, changed = [], False
             for action in self._commit_actions(v):
@@ -192,80 +137,54 @@ class DeltaTailStreamReader(DataSourceStreamReader):
                         changed = True  # DV rewrite: not insert-only
                     adds.append(action["add"])
             if changed:
-                if not self._skip_changes:
-                    raise ValueError(
-                        f"version {v} of {self._path} rewrote or removed"
-                        " data (DELETE/UPDATE/MERGE/DV): not an append-only"
-                        " stream. Set .option('skipChangeCommits', 'true')"
-                        " to ignore change commits, or consume row-level"
-                        " changes with the batch read_delta_changes feed."
-                    )
+                self._change_commit(
+                    f"version {v} of {self._path} rewrote or removed"
+                    " data (DELETE/UPDATE/MERGE/DV): not an append-only"
+                    " stream. Set .option('skipChangeCommits', 'true')"
+                    " to ignore change commits, or consume row-level"
+                    " changes with the batch read_delta_changes feed."
+                )
                 continue
-            from urllib.parse import unquote
-
             for add in adds:
-                rel = unquote(add["path"])
+                pv = add.get("partitionValues") or {}
                 parts.append(
-                    _DeltaFile(
-                        os.path.join(self._path, rel),
-                        self._schema_json,
-                        {
-                            c: (add.get("partitionValues") or {}).get(c)
-                            for c in self._pcols
-                        },
+                    FileSpec(
+                        os.path.join(self._path, unquote(add["path"])),
+                        {c: pv.get(c) for c in self._pcols},
                     )
                 )
         return parts
 
-    def read(self, partition: _DeltaFile) -> Iterator:
-        import pyarrow as pa
+    def _load(self, spec: FileSpec, schema):
+        """The file, refusing columns the schema lacks, with its
+        deletion vector (``spec.mask``) applied."""
         import pyarrow.parquet as pq
 
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
+        from .dv import decode_rbm_array, load_dv_bytes
 
-        schema = StructType.fromJson(json.loads(partition.schema_json))
-        types = {f.name: f.dataType for f in schema.fields}
-        target = to_arrow_schema(schema)
-        table = pq.read_table(partition.path)
+        raw = pq.read_table(spec.path)
         # schema-evolution guard, matching the batch path's footer probe
-        # (ADVICE r17): a file holding a column the committed schema
-        # lacks is an out-of-spec RENAME/DROP — null-padding the renamed
-        # column (the else-branch below) would silently drop its data.
-        # Stray in-file copies of partition columns are tolerated: the
-        # log is authoritative for their values.
+        # (ADVICE r17): a file holding a column the schema lacks is an
+        # out-of-spec RENAME/DROP — null-padding the renamed column would
+        # silently drop its data.  Stray in-file copies of partition
+        # columns are tolerated: the log is authoritative for their values.
         allowed = {f.name for f in schema.fields}
-        unknown = [n for n in table.column_names if n not in allowed]
+        unknown = [n for n in raw.column_names if n not in allowed]
         if unknown:
             raise NotImplementedError(
-                f"data file {partition.path!r} holds column(s)"
-                f" {unknown} absent from the committed schema; without"
-                " column mapping only ADD COLUMN is legal evolution, so"
-                " this is a rename/drop this reader cannot resolve."
+                f"data file {spec.path!r} holds column(s) {unknown}"
+                f" absent from {self._rename_drop}"
             )
-        cols = []
-        for field in target:
-            if field.name in partition.pvalues:
-                tv = _typed_partition_value(
-                    partition.pvalues[field.name], types[field.name]
-                )
-                cols.append(
-                    pa.array([tv] * table.num_rows).cast(field.type)
-                    if tv is not None
-                    else pa.nulls(table.num_rows, field.type)
-                )
-            elif field.name in table.column_names:
-                cols.append(table.column(field.name).cast(field.type))
-            else:
-                # pre-evolution file: pad appended columns with nulls,
-                # matching the batch read path
-                cols.append(pa.nulls(table.num_rows, field.type))
-        yield from pa.Table.from_arrays(cols, schema=target).to_batches()
+        if spec.mask is None:
+            return raw
+        dv = load_dv_bytes(self._path, spec.mask)
+        return drop_positions(raw, decode_rbm_array(dv))
 
-    def commit(self, end: dict) -> None:
-        # offsets live in the query checkpoint; commit JSONs are
-        # immutable, so there is no source-side state to release
-        pass
+
+class DeltaTailDataSource(LogTailSource):
+    """Foreign Delta log as a streaming source (format ``delta_tail``)."""
+
+    reader = DeltaTailStreamReader
 
 
 def register_delta_stream_source(spark: SparkSession) -> None:

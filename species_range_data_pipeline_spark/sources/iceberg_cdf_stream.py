@@ -1,34 +1,23 @@
 """Streaming CHANGE-DATA-FEED source over an Iceberg Hadoop layout.
 
 ``sources/iceberg_stream.py`` tails the snapshot log as an append-only
-stream (change snapshots fail or skip); this module is the Iceberg
-twin of ``sources/delta_cdf_stream.py``: the batch feed's
-manifest-walk multiset-diff algebra (``iceberg_log.
-iceberg_read_changes``) composed with snapshot-id offsets on Spark 4's
-Python streaming data source API:
+stream; this module is the Iceberg twin of
+``sources/delta_cdf_stream.py``: the batch feed's manifest-walk
+multiset-diff algebra (``iceberg_log.iceberg_read_changes``) on the
+shared change-feed contract (``sources/log_tail.py``):
 
     register_iceberg_cdf_stream_source(spark)
     stream = (spark.readStream.format("iceberg_cdf_tail")
               .option("path", tbl).load())
 
-- **Offsets are snapshot ids** (the ``iceberg_tail`` contract): a
-  microbatch covers the snapshot steps in ``(start, end]``; snapshots
-  and manifests are immutable, so a checkpoint-replayed batch
-  recomputes exactly the same change rows — exactly-once with an
-  idempotent sink.
-- **Output schema** is the table's columns plus ``_change_type``
-  ('insert' | 'delete') and ``_snapshot_id`` — the batch feed's shape,
-  so the two are interchangeable downstream.
+- **Offsets are snapshot ids** (the ``iceberg_tail`` offsets); the
+  version column is ``_snapshot_id`` (bigint).
 - **Step semantics match the batch feed exactly**: each step diffs the
   live DATA-file sets and the POSITION-DELETE coverage.  Pure appends
-  stream the added files vectorized (one Spark task per file, Arrow
-  batches straight through, current delete files masked per file);
-  pure removals stream the dropped files as deletes under the OLD
-  delete set; a step that both removes and adds (rewrites, and any
-  delete-coverage change — the affected files sit on BOTH sides, old
-  deletes vs new) folds to ONE task emitting the NET multiset
-  difference, so a merge-on-read DELETE surfaces exactly its
-  newly-masked rows (carried rows cancel).
+  are masked by the current delete files; pure removals stream under
+  the OLD delete set; a delete-coverage change puts the affected files
+  on BOTH sides (old deletes vs new), so the step folds to one net-diff
+  task.
 - **Position deletes are applied in the per-file reader** (read the
   candidate delete parquets, match rows by the batch mask's key —
   scheme-stripped writer path == the data file's absolute path — and
@@ -37,373 +26,90 @@ Python streaming data source API:
 - Boundaries, loud (each the batch feed's): equality-delete files in
   the range are refused (value-keyed coverage is not diffable here —
   read snapshots with ``read_iceberg_table``, which applies them),
-  branched snapshot histories are refused, MapType columns cannot be
-  multiset-diffed, an expired checkpointed snapshot id fails with a
-  fresh-checkpoint instruction, and migrated layouts (identity
-  partition source columns absent from a data file) are refused by a
-  footer probe — this reader cannot restore manifest partition tuples.
+  branched snapshot histories are refused, an expired checkpointed
+  snapshot id fails with a fresh-checkpoint instruction, and migrated
+  layouts (identity partition source columns absent from a data file)
+  are refused by a footer probe — this reader cannot restore manifest
+  partition tuples.
 
 At scale the driver work per batch is a manifest walk per touched
 snapshot (metadata-sized) plus the ``file_path`` columns of CHANGED
 delete files; read work is the files each step touched — the feed
-costs the day's churn, never the table.  The one-task fold for mixed
-steps is the honest cut: its inputs are commit-scoped by the MoR
-contract (same shape measured for the Delta twin, SCALE.md rule 63).
+costs the day's churn, never the table (same shape measured for the
+Delta twin, SCALE.md rule 63).
 """
 
 from __future__ import annotations
 
-import json
-import os
-import re
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
 
-from .iceberg_log import (
-    _current_schema,
-    _identity_partition_fields,
-    _load_metadata,
-    _resolve,
-    _struct_type,
-    _walk_entries,
+from .iceberg_log import _resolve
+from .iceberg_stream import IcebergTailStreamReader, _SnapshotRange
+from .log_tail import (
+    ChangeStep,
+    FileSpec,
+    LogTailSource,
+    cdf_schema,
+    change_partitions,
 )
-from .iceberg_stream import _linear_snapshots
 
 
 def _cdf_schema(table_schema):
-    from pyspark.sql.types import (
-        LongType,
-        MapType,
-        StringType,
-        StructField,
-        StructType,
+    from pyspark.sql.types import LongType, StructField
+
+    return cdf_schema(
+        table_schema, StructField("_snapshot_id", LongType(), False)
     )
 
-    if any(isinstance(f.dataType, MapType) for f in table_schema.fields):
-        raise NotImplementedError(
-            "change feed needs multiset-diff over all columns; MapType"
-            " columns are not comparable — drop or cast the map column"
+
+class IcebergCdfTailStreamReader(IcebergTailStreamReader):
+    format_name = "iceberg_cdf_tail"
+    _role = "feed"
+
+    @staticmethod
+    def stream_schema(path: str):
+        return _cdf_schema(IcebergTailStreamReader.stream_schema(path))
+
+    def _touched_by(self, delete_files: set[str]) -> set[str]:
+        import pyarrow.parquet as pq
+
+        touched: set[str] = set()
+        for df in delete_files:
+            col = pq.read_table(df, columns=["file_path"]).column("file_path")
+            touched |= {_resolve(self._path, str(v)) for v in col.unique()}
+        return touched
+
+    def partitions(self, start: dict, end: dict) -> Sequence[ChangeStep]:
+        log = _SnapshotRange(
+            self._path, start.get("snapshot_id"), end.get("snapshot_id")
         )
-    return StructType(
-        [
-            *table_schema.fields,
-            StructField("_change_type", StringType(), False),
-            StructField("_snapshot_id", LongType(), False),
-        ]
-    )
-
-
-def _strip_scheme(p: str) -> str:
-    """The batch position-delete mask's join key normalization
-    (``iceberg_log._apply_position_deletes``): writer-recorded paths
-    lose their ``file:``/``file://`` prefix and compare as plain
-    absolute paths."""
-    return re.sub("^file:(//)?", "", p)
-
-
-class _CdfFileSpec:
-    """One data file of a step side: absolute path plus the delete
-    files (absolute paths) that side's coverage consults."""
-
-    def __init__(self, fpath: str, delete_files: tuple[str, ...]):
-        self.fpath = fpath
-        self.delete_files = delete_files
-
-
-class _IceCdfFile(InputPartition):
-    """A pure insert/delete step file: vectorized single-file read."""
-
-    def __init__(self, snap_id: int, schema_json: str, ctype: str,
-                 spec: _CdfFileSpec):
-        self.snap_id = snap_id
-        self.schema_json = schema_json
-        self.ctype = ctype
-        self.spec = spec
-
-
-class _IceCdfDiff(InputPartition):
-    """A mixed step (rewrite or delete-coverage change): both sides
-    fold to one net multiset diff."""
-
-    def __init__(self, snap_id: int, schema_json: str,
-                 removed: list[_CdfFileSpec], added: list[_CdfFileSpec]):
-        self.snap_id = snap_id
-        self.schema_json = schema_json
-        self.removed = removed
-        self.added = added
-
-
-class IcebergCdfTailDataSource(DataSource):
-    """Iceberg Hadoop layout as a streaming CDF source
-    (``iceberg_cdf_tail``)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "iceberg_cdf_tail"
-
-    def schema(self):
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("iceberg_cdf_tail requires .option('path', ...)")
-        meta = _load_metadata(path)
-        return _cdf_schema(_struct_type(_current_schema(meta, path)))
-
-    def streamReader(self, schema) -> "IcebergCdfTailStreamReader":
-        return IcebergCdfTailStreamReader(self.options, schema)
-
-
-class IcebergCdfTailStreamReader(DataSourceStreamReader):
-    def __init__(self, options, schema):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("iceberg_cdf_tail requires .option('path', ...)")
-        starting = options.get("startingSnapshotId")
-        if starting is None:
-            self._first_id = None  # the full history streams as changes
-        elif str(starting).lower() == "latest":
-            # only snapshots committed AFTER the stream starts; resolved
-            # once at construction (the r10 offset-pin rule)
-            meta = _load_metadata(self._path)
-            snaps = _linear_snapshots(meta, self._path)
-            self._first_id = snaps[-1]["snapshot-id"] if snaps else None
-        else:
-            self._first_id = int(starting)
-        self._schema_json = schema.json()
-
-    def initialOffset(self) -> dict:
-        # the offset names the last CONSUMED snapshot id (None = none)
-        return {"snapshot_id": self._first_id}
-
-    def latestOffset(self) -> dict:
-        meta = _load_metadata(self._path)
-        snaps = _linear_snapshots(meta, self._path)
-        if not snaps:
-            raise ValueError(f"no snapshot at {self._path}")
-        return {"snapshot_id": snaps[-1]["snapshot-id"]}
-
-    def _index_of(self, snaps: list[dict], snapshot_id) -> int:
-        if snapshot_id is None:
-            return -1
-        ids = [s["snapshot-id"] for s in snaps]
-        if snapshot_id not in ids:
-            raise ValueError(
-                f"snapshot {snapshot_id} of {self._path} is no longer in"
-                " the metadata (expired?); restart the stream with a"
-                " fresh checkpoint"
-            )
-        return ids.index(snapshot_id)
-
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        meta = _load_metadata(self._path)
-        snaps = _linear_snapshots(meta, self._path)
-        lo = self._index_of(snaps, start.get("snapshot_id"))
-        hi = self._index_of(snaps, end.get("snapshot_id"))
-
-        def _state(i: int) -> tuple[set[str], set[str]]:
-            if i < 0:
-                return set(), set()
-            data, dels = set(), set()
-            for kind, d, _sid, _seq in _walk_entries(self._path, snaps[i]):
-                if kind == "eqdel":
-                    # value-keyed coverage is not position-diffable; the
-                    # batch feed refuses identically
-                    raise NotImplementedError(
-                        f"equality-delete file {d['file_path']!r} in the"
-                        " change-feed range; the Iceberg feed diffs"
-                        " position-delete coverage only — read snapshots"
-                        " directly (read_iceberg_table applies equality"
-                        " deletes) or compact the deletes away."
-                    )
-                (data if kind == "data" else dels).add(
-                    _resolve(self._path, d["file_path"])
-                )
-            return data, dels
-
-        def _touched_by(delete_files: set[str]) -> set[str]:
-            import pyarrow.parquet as pq
-
-            touched: set[str] = set()
-            for df in delete_files:
-                col = pq.read_table(df, columns=["file_path"]).column(
-                    "file_path"
-                )
-                touched |= {_resolve(self._path, str(v)) for v in col.unique()}
-            return touched
-
-        # migrated-layout guard: identity-partition source columns must
-        # be present in-file — this reader cannot restore manifest
-        # partition tuples (the iceberg_tail probe, same boundary)
-        id_cols = {
-            by_src["name"]
-            for pairs in _identity_partition_fields(meta).values()
-            for _pname, source_id in pairs
-            for by_src in _current_schema(meta, self._path)["fields"]
-            if by_src["id"] == source_id
-        }
-
-        def _probe(fpath: str) -> None:
-            if not id_cols:
-                return
-            import pyarrow.parquet as pq
-
-            missing = id_cols - set(pq.read_schema(fpath).names)
-            if missing:
-                raise NotImplementedError(
-                    f"data file {fpath!r} lacks identity-partition"
-                    f" column(s) {sorted(missing)} (migrated layout);"
-                    " the streaming feed cannot restore manifest"
-                    " partition values — use the batch reader."
-                )
-
-        parts: list[InputPartition] = []
-        prev_data, prev_dels = _state(lo)
-        for i in range(lo + 1, hi + 1):
-            cur_data, cur_dels = _state(i)
+        parts: list[ChangeStep] = []
+        for snap_id, prev, cur in log.steps(refuse_eq_deletes=True):
+            (prev_data, prev_dels), (cur_data, cur_dels) = prev, cur
             changed_dels = (cur_dels - prev_dels) | (prev_dels - cur_dels)
-            affected = _touched_by(changed_dels) if changed_dels else set()
+            affected = (
+                self._touched_by(changed_dels) if changed_dels else set()
+            )
             both = affected & prev_data & cur_data
             removed = sorted((prev_data - cur_data) | both)
             added = sorted((cur_data - prev_data) | both)
-            snap_id = snaps[i]["snapshot-id"]
             for f in added:
-                _probe(f)
-            r_specs = [
-                _CdfFileSpec(f, tuple(sorted(prev_dels))) for f in removed
-            ]
-            a_specs = [
-                _CdfFileSpec(f, tuple(sorted(cur_dels))) for f in added
-            ]
-            if removed and added:
-                parts.append(
-                    _IceCdfDiff(snap_id, self._schema_json, r_specs, a_specs)
-                )
-            elif added or removed:
-                ctype = "insert" if added else "delete"
-                for spec in a_specs or r_specs:
-                    parts.append(
-                        _IceCdfFile(snap_id, self._schema_json, ctype, spec)
-                    )
-            prev_data, prev_dels = cur_data, cur_dels
+                log.probe(f, self._role)
+            parts += change_partitions(
+                snap_id,
+                [FileSpec(f, mask=tuple(sorted(prev_dels))) for f in removed],
+                [FileSpec(f, mask=tuple(sorted(cur_dels))) for f in added],
+            )
         return parts
 
-    # -- executor side -----------------------------------------------
 
-    def _load_side(self, spec: _CdfFileSpec, data_schema):
-        """One data file -> pyarrow Table under the stream's columns
-        (null-padding columns appended after the file was written —
-        absent identity-partition columns were refused at planning),
-        with the side's position-delete coverage masked out."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+class IcebergCdfTailDataSource(LogTailSource):
+    """Iceberg Hadoop layout as a streaming CDF source
+    (``iceberg_cdf_tail``)."""
 
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        target = to_arrow_schema(data_schema)
-        raw = pq.read_table(spec.fpath)
-        me = _strip_scheme(spec.fpath)
-        positions: set[int] = set()
-        for dpath in spec.delete_files:
-            dt = pq.read_table(dpath, columns=["file_path", "pos"])
-            for fp, pos in zip(
-                dt.column("file_path").to_pylist(),
-                dt.column("pos").to_pylist(),
-            ):
-                if _strip_scheme(str(fp)) == me:
-                    positions.add(int(pos))
-        if positions:
-            keep = np.ones(raw.num_rows, dtype=bool)
-            inside = [p for p in positions if p < raw.num_rows]
-            keep[inside] = False
-            raw = raw.filter(pa.array(keep))
-        cols = []
-        for field in target:
-            if field.name in raw.column_names:
-                cols.append(raw.column(field.name).cast(field.type))
-            else:
-                cols.append(pa.nulls(raw.num_rows, field.type))
-        return pa.Table.from_arrays(cols, schema=target)
-
-    def read(self, partition) -> Iterator:
-        import pyarrow as pa
-
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
-
-        out_schema = StructType.fromJson(json.loads(partition.schema_json))
-        data_schema = StructType(out_schema.fields[:-2])
-        target = to_arrow_schema(out_schema)
-
-        def _with_cdf(tbl, ctype: str, snap_id: int):
-            n = tbl.num_rows
-            return pa.Table.from_arrays(
-                [
-                    *[tbl.column(f.name) for f in data_schema.fields],
-                    pa.array([ctype] * n, pa.string()),
-                    pa.array([snap_id] * n, pa.int64()),
-                ],
-                schema=target,
-            )
-
-        if isinstance(partition, _IceCdfFile):
-            tbl = self._load_side(partition.spec, data_schema)
-            yield from _with_cdf(
-                tbl, partition.ctype, partition.snap_id
-            ).to_batches()
-            return
-
-        # mixed step: net multiset diff of both sides, exact (rows
-        # frozen to hashable tuples — no float coercion)
-        from collections import Counter
-
-        def _freeze(v):
-            if isinstance(v, list):
-                return ("__list__", tuple(_freeze(x) for x in v))
-            if isinstance(v, dict):
-                return (
-                    "__struct__",
-                    tuple((k, _freeze(x)) for k, x in sorted(v.items())),
-                )
-            return v
-
-        def _thaw(v):
-            if isinstance(v, tuple) and len(v) == 2 and v[0] == "__list__":
-                return [_thaw(x) for x in v[1]]
-            if isinstance(v, tuple) and len(v) == 2 and v[0] == "__struct__":
-                return {k: _thaw(x) for k, x in v[1]}
-            return v
-
-        net: Counter = Counter()
-        for sign, specs in ((-1, partition.removed), (1, partition.added)):
-            for spec in specs:
-                tbl = self._load_side(spec, data_schema)
-                for row in tbl.to_pylist():
-                    key = tuple(
-                        _freeze(row[f.name]) for f in data_schema.fields
-                    )
-                    net[key] += sign
-        names = [f.name for f in data_schema.fields]
-        rows = []
-        for key, n in sorted(net.items(), key=lambda kv: repr(kv[0])):
-            if n == 0:
-                continue
-            base = {c: _thaw(v) for c, v in zip(names, key)}
-            base["_change_type"] = "insert" if n > 0 else "delete"
-            base["_snapshot_id"] = partition.snap_id
-            rows.extend([base] * abs(n))
-        if rows:
-            yield from pa.Table.from_pylist(rows, schema=target).to_batches()
-
-    def commit(self, end: dict) -> None:
-        # offsets live in the query checkpoint; snapshots/manifests are
-        # immutable, so there is no source-side state to release
-        pass
+    reader = IcebergCdfTailStreamReader
 
 
 def register_iceberg_cdf_stream_source(spark: SparkSession) -> None:

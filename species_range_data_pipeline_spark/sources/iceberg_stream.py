@@ -1,54 +1,41 @@
 """Streaming source over an Iceberg Hadoop-layout table: snapshot
-tailing — the Iceberg twin of ``sources/delta_stream.py`` (which tails
-a foreign ``_delta_log``), on Spark 4's Python streaming data source
-API:
+tailing — the Iceberg twin of ``sources/delta_stream.py``, on the shared
+tail contract (``sources/log_tail.py``):
 
     register_iceberg_stream_source(spark)
     stream = spark.readStream.format("iceberg_tail").option("path", tbl).load()
 
 - **Offsets are snapshot ids**, resolved against the metadata's
   snapshot list (the linear history — branched parent chains are
-  refused, the ``iceberg_read_changes`` guard).  A microbatch covers
-  the snapshots after the start offset; its input partitions are
-  exactly the DATA files those snapshots ADDED (live-set difference vs
-  the predecessor snapshot — manifest-entry statuses alone can't be
-  trusted across manifest rewrites), one Spark task per file, never a
-  table rescan.  Snapshots and manifests are immutable, so a batch
-  replayed from the checkpoint re-reads identical rows: exactly-once
-  with an idempotent sink.
-- **Append-only contract, explicitly.**  A snapshot that removed data
-  files or changed the delete-file set (DELETE/UPDATE/MERGE/compaction
-  rewrites) is not representable as an insert-only stream: default is
-  a loud failure; ``.option("skipChangeCommits", "true")`` ignores
-  those snapshots — the same knob as the Delta tail.  Row-level change
-  consumption is ``iceberg_read_changes``' job.
+  refused, the ``iceberg_read_changes`` guard); ``startingSnapshotId``
+  names the last snapshot NOT streamed.  A batch's files are the DATA
+  files each snapshot ADDED (live-set difference vs the predecessor
+  snapshot — manifest-entry statuses alone can't be trusted across
+  manifest rewrites).
+- **Change commits** are snapshots that removed data files or changed
+  the delete-file set (DELETE/UPDATE/MERGE/compaction rewrites);
+  row-level change consumption is ``iceberg_read_changes``' job.
 - **Expired history raises.**  If the checkpointed snapshot id is no
   longer in the metadata (snapshot expiry), the stream fails with a
   fresh-checkpoint instruction rather than silently re-emitting or
   gapping — the manifest_stream vacuumed-baseline rule.
 - Iceberg data files are COMPLETE (identity-partition columns
-  in-file), so the per-file reader only null-pads columns appended
-  after the file was written; migrated (stripped) layouts are refused
-  by a footer probe on first use, matching the batch read path's
-  boundary.
+  in-file), so no partition value is restored; migrated (stripped)
+  layouts are refused by a footer probe on first use, matching the
+  batch read path's boundary.
 
-At scale the planner work per batch is the manifest walk of the new
-snapshots (driver-side, metadata-sized) and the read work is the files
-each snapshot landed — tailing a 100 TB table costs the day's appends.
+``_SnapshotRange`` (the per-snapshot live-file state and the footer
+probe) and the position-delete mask are shared with the change feed
+(``sources/iceberg_cdf_stream.py``).
 """
 
 from __future__ import annotations
 
-import json
-import os
-from collections.abc import Iterator, Sequence
+import re
+from collections.abc import Sequence
+from functools import cached_property
 
 from pyspark.sql import SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
 
 from .iceberg_log import (
     _current_schema,
@@ -58,12 +45,7 @@ from .iceberg_log import (
     _struct_type,
     _walk_entries,
 )
-
-
-class _IcebergFile(InputPartition):
-    def __init__(self, path: str, schema_json: str):
-        self.path = path
-        self.schema_json = schema_json
+from .log_tail import FileSpec, LogTailReader, LogTailSource, drop_positions
 
 
 def _linear_snapshots(meta: dict, path: str) -> list[dict]:
@@ -80,166 +62,163 @@ def _linear_snapshots(meta: dict, path: str) -> list[dict]:
     return snaps
 
 
-class IcebergTailDataSource(DataSource):
-    """Iceberg Hadoop layout as a streaming source (format
-    ``iceberg_tail``)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "iceberg_tail"
-
-    def schema(self):
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("iceberg_tail requires .option('path', ...)")
-        meta = _load_metadata(path)
-        return _struct_type(_current_schema(meta, path))
-
-    def streamReader(self, schema) -> "IcebergTailStreamReader":
-        return IcebergTailStreamReader(self.options, schema)
+def _strip_scheme(p: str) -> str:
+    """The batch position-delete mask's join key normalization
+    (``iceberg_log._apply_position_deletes``): writer-recorded paths
+    lose their ``file:``/``file://`` prefix and compare as plain
+    absolute paths."""
+    return re.sub("^file:(//)?", "", p)
 
 
-class IcebergTailStreamReader(DataSourceStreamReader):
-    def __init__(self, options, schema):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("iceberg_tail requires .option('path', ...)")
-        self._skip_changes = (
-            str(options.get("skipChangeCommits", "false")).lower() == "true"
-        )
-        starting = options.get("startingSnapshotId")
-        if starting is None:
-            self._first_id = None  # from the beginning of history
-        elif str(starting).lower() == "latest":
-            # consume only snapshots committed AFTER the stream starts;
-            # resolved once at construction (the r10 offset-pin rule)
-            meta = _load_metadata(self._path)
-            snaps = _linear_snapshots(meta, self._path)
-            self._first_id = snaps[-1]["snapshot-id"] if snaps else None
-        else:
-            self._first_id = int(starting)
-        self._schema_json = schema.json()
+class _SnapshotRange:
+    """The snapshots after ``start`` up to ``end`` (ids; ``None`` = before
+    the first) of one table's linear history."""
 
-    def initialOffset(self) -> dict:
-        # the offset names the last CONSUMED snapshot id (None = none)
-        return {"snapshot_id": self._first_id}
+    def __init__(self, path: str, start, end):
+        self.path = path
+        self.meta = _load_metadata(path)
+        self.snaps = _linear_snapshots(self.meta, path)
+        self.lo, self.hi = self._index_of(start), self._index_of(end)
 
-    def latestOffset(self) -> dict:
-        meta = _load_metadata(self._path)
-        snaps = _linear_snapshots(meta, self._path)
-        if not snaps:
-            raise ValueError(f"no snapshot at {self._path}")
-        return {"snapshot_id": snaps[-1]["snapshot-id"]}
-
-    def _index_of(self, snaps: list[dict], snapshot_id) -> int:
+    def _index_of(self, snapshot_id) -> int:
         """List index of ``snapshot_id``; -1 for the before-first None."""
         if snapshot_id is None:
             return -1
-        ids = [s["snapshot-id"] for s in snaps]
+        ids = [s["snapshot-id"] for s in self.snaps]
         if snapshot_id not in ids:
             raise ValueError(
-                f"snapshot {snapshot_id} of {self._path} is no longer in"
+                f"snapshot {snapshot_id} of {self.path} is no longer in"
                 " the metadata (expired?); restart the stream with a"
                 " fresh checkpoint"
             )
         return ids.index(snapshot_id)
 
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        meta = _load_metadata(self._path)
-        snaps = _linear_snapshots(meta, self._path)
-        lo = self._index_of(snaps, start.get("snapshot_id"))
-        hi = self._index_of(snaps, end.get("snapshot_id"))
-
-        def _state(i: int) -> tuple[set[str], set[str]]:
-            if i < 0:
-                return set(), set()
-            data, dels = set(), set()
-            for kind, d, _sid, _seq in _walk_entries(self._path, snaps[i]):
-                # equality deletes count as change coverage like
-                # position deletes do: any delete-file change trips the
-                # append-only guard below, which is exactly right
-                (data if kind == "data" else dels).add(
-                    _resolve(self._path, d["file_path"])
-                )
+    def _state(self, i: int, refuse_eq_deletes: bool):
+        """(live data files, live delete files) of snapshot ``i``."""
+        data, dels = set(), set()
+        if i < 0:
             return data, dels
+        for kind, d, _sid, _seq in _walk_entries(self.path, self.snaps[i]):
+            if kind == "eqdel" and refuse_eq_deletes:
+                # value-keyed coverage is not position-diffable; the
+                # batch feed refuses identically
+                raise NotImplementedError(
+                    f"equality-delete file {d['file_path']!r} in the"
+                    " change-feed range; the Iceberg feed diffs"
+                    " position-delete coverage only — read snapshots"
+                    " directly (read_iceberg_table applies equality"
+                    " deletes) or compact the deletes away."
+                )
+            (data if kind == "data" else dels).add(
+                _resolve(self.path, d["file_path"])
+            )
+        return data, dels
 
-        # migrated-layout guard: the per-file reader null-pads columns
-        # missing from a file, which is WRONG for identity-partition
-        # source columns (their values live in the manifest tuples) —
-        # probe each newly added file's footer (one metadata-sized read
-        # per landed file, driver-side) and refuse the stripped layout,
-        # matching the batch path's boundary
-        id_cols = {
+    def steps(self, refuse_eq_deletes: bool = False):
+        """(snapshot id, previous state, state) per snapshot in range."""
+        prev = self._state(self.lo, refuse_eq_deletes)
+        for i in range(self.lo + 1, self.hi + 1):
+            cur = self._state(i, refuse_eq_deletes)
+            yield self.snaps[i]["snapshot-id"], prev, cur
+            prev = cur
+
+    @cached_property
+    def _id_cols(self) -> set[str]:
+        return {
             by_src["name"]
-            for pairs in _identity_partition_fields(meta).values()
+            for pairs in _identity_partition_fields(self.meta).values()
             for _pname, source_id in pairs
-            for by_src in _current_schema(meta, self._path)["fields"]
+            for by_src in _current_schema(self.meta, self.path)["fields"]
             if by_src["id"] == source_id
         }
 
-        def _probe(fpath: str) -> None:
-            if not id_cols:
-                return
-            import pyarrow.parquet as pq
-
-            missing = id_cols - set(pq.read_schema(fpath).names)
-            if missing:
-                raise NotImplementedError(
-                    f"data file {fpath!r} lacks identity-partition"
-                    f" column(s) {sorted(missing)} (migrated layout);"
-                    " the streaming tail cannot restore manifest"
-                    " partition values — use the batch reader."
-                )
-
-        parts: list[InputPartition] = []
-        prev_data, prev_dels = _state(lo)
-        for i in range(lo + 1, hi + 1):
-            cur_data, cur_dels = _state(i)
-            removed = prev_data - cur_data
-            dels_changed = cur_dels != prev_dels
-            added = sorted(cur_data - prev_data)
-            prev_data, prev_dels = cur_data, cur_dels
-            if removed or dels_changed:
-                if not self._skip_changes:
-                    raise ValueError(
-                        f"snapshot {snaps[i]['snapshot-id']} of"
-                        f" {self._path} rewrote/removed data or changed"
-                        " row-level deletes: not an append-only stream."
-                        " Set .option('skipChangeCommits', 'true') to"
-                        " ignore change snapshots, or consume row-level"
-                        " changes with iceberg_read_changes."
-                    )
-                continue
-            for f in added:
-                _probe(f)
-                parts.append(_IcebergFile(f, self._schema_json))
-        return parts
-
-    def read(self, partition: _IcebergFile) -> Iterator:
-        import pyarrow as pa
+    def probe(self, fpath: str, role: str) -> None:
+        """Migrated-layout guard: the per-file reader null-pads columns
+        missing from a file, which is WRONG for identity-partition
+        source columns (their values live in the manifest tuples) — one
+        metadata-sized footer read per landed file, driver-side."""
+        if not self._id_cols:
+            return
         import pyarrow.parquet as pq
 
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
+        missing = self._id_cols - set(pq.read_schema(fpath).names)
+        if missing:
+            raise NotImplementedError(
+                f"data file {fpath!r} lacks identity-partition"
+                f" column(s) {sorted(missing)} (migrated layout);"
+                f" the streaming {role} cannot restore manifest"
+                " partition values — use the batch reader."
+            )
 
-        schema = StructType.fromJson(json.loads(partition.schema_json))
-        target = to_arrow_schema(schema)
-        table = pq.read_table(partition.path)
-        cols = []
-        for field in target:
-            if field.name in table.column_names:
-                cols.append(table.column(field.name).cast(field.type))
-            else:
-                # a column appended after this file was written is
-                # null-padded, matching the batch read path (absent
-                # identity-partition columns were refused at planning)
-                cols.append(pa.nulls(table.num_rows, field.type))
-        yield from pa.Table.from_arrays(cols, schema=target).to_batches()
 
-    def commit(self, end: dict) -> None:
-        # offsets live in the query checkpoint; snapshots/manifests are
-        # immutable, so there is no source-side state to release
-        pass
+class IcebergTailStreamReader(LogTailReader):
+    format_name = "iceberg_tail"
+    offset_key = "snapshot_id"
+    starting_option = "startingSnapshotId"
+    before_first = None
+    empty_log = "no snapshot at"
+    _role = "tail"  # names the reader in the migrated-layout refusal
+
+    @staticmethod
+    def _start_offset(starting: int) -> int:
+        return starting  # names the last snapshot NOT streamed
+
+    @staticmethod
+    def stream_schema(path: str):
+        return _struct_type(_current_schema(_load_metadata(path), path))
+
+    def positions(self) -> list[int]:
+        snaps = _linear_snapshots(_load_metadata(self._path), self._path)
+        return [s["snapshot-id"] for s in snaps]
+
+    def partitions(self, start: dict, end: dict) -> Sequence[FileSpec]:
+        log = _SnapshotRange(
+            self._path, start.get("snapshot_id"), end.get("snapshot_id")
+        )
+        parts: list[FileSpec] = []
+        # equality deletes count as change coverage like position deletes
+        # do: any delete-file change trips the append-only guard
+        for snap_id, prev, cur in log.steps():
+            (prev_data, prev_dels), (cur_data, cur_dels) = prev, cur
+            if prev_data - cur_data or cur_dels != prev_dels:
+                self._change_commit(
+                    f"snapshot {snap_id} of"
+                    f" {self._path} rewrote/removed data or changed"
+                    " row-level deletes: not an append-only stream."
+                    " Set .option('skipChangeCommits', 'true') to"
+                    " ignore change snapshots, or consume row-level"
+                    " changes with iceberg_read_changes."
+                )
+                continue
+            for f in sorted(cur_data - prev_data):
+                log.probe(f, self._role)
+                parts.append(FileSpec(f))
+        return parts
+
+    def _load(self, spec: FileSpec, schema):
+        """The file minus the rows its side's position-delete files
+        (``spec.mask``, absolute paths) cover."""
+        import pyarrow.parquet as pq
+
+        raw = pq.read_table(spec.path)
+        me = _strip_scheme(spec.path)
+        positions: set[int] = set()
+        for dpath in spec.mask or ():
+            dt = pq.read_table(dpath, columns=["file_path", "pos"])
+            for fp, pos in zip(
+                dt.column("file_path").to_pylist(),
+                dt.column("pos").to_pylist(),
+            ):
+                if _strip_scheme(str(fp)) == me:
+                    positions.add(int(pos))
+        return drop_positions(raw, sorted(positions)) if positions else raw
+
+
+class IcebergTailDataSource(LogTailSource):
+    """Iceberg Hadoop layout as a streaming source (format
+    ``iceberg_tail``)."""
+
+    reader = IcebergTailStreamReader
 
 
 def register_iceberg_stream_source(spark: SparkSession) -> None:

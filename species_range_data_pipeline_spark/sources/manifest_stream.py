@@ -1,112 +1,52 @@
 """Streaming source over the manifest table: version-offset tailing.
 
 ``write_stream_manifest`` (sources/manifest_table.py) is the sink half of
-streaming over the table format; this module is the SOURCE half — the
-Delta-streaming-source shape rebuilt on Spark 4's Python streaming data
-source API (``pyspark.sql.datasource.DataSourceStreamReader``):
+streaming over the table format; this module is the SOURCE half, on the
+shared tail contract (``sources/log_tail.py``):
 
     register_manifest_stream_source(spark)
-    stream = spark.readStream.format("manifest_stream").option("path", tbl).load()
+    stream = (spark.readStream.format("manifest_stream")
+              .option("path", tbl).load())
 
-- **Offsets are table versions.**  ``latestOffset`` is the newest
-  committed version; a microbatch covers the versions in ``(start, end]``
-  and its input partitions are exactly the data files those commits
-  ADDED — one Spark task per file, never a rescan of the table.  Commit
-  manifests are immutable, so a batch replayed from the checkpoint after
-  a crash re-reads precisely the same rows: end-to-end exactly-once when
-  paired with an idempotent sink (e.g. ``write_stream_manifest``'s txn
-  protocol — table-to-table streaming pipelines compose).
-- **Append-only contract, explicitly.**  A version that REMOVED files
-  (DELETE/UPDATE/MERGE/OPTIMIZE rewrites) is not representable as an
-  insert-only stream.  Default: the stream fails loudly on such a commit.
-  ``.option("skipChangeCommits", "true")`` ignores those versions and
-  streams only pure appends — the same knob (and name) as Delta's
-  streaming source.  Row-level change consumption is the batch
-  ``read_changes`` feed's job.
+- **Offsets are table versions**; a batch's files are those each
+  version's manifest lists and its predecessor's does not.  Paired with
+  ``write_stream_manifest``'s txn protocol, table-to-table streaming
+  pipelines compose exactly-once.
+- **Change commits** are versions whose manifest dropped files
+  (DELETE/UPDATE/MERGE/OPTIMIZE rewrites); row-level change consumption
+  is the batch ``read_changes`` feed's job.
+- A resumed stream whose baseline manifest was vacuumed fails rather
+  than re-emitting the carried files (Delta's "offset no longer
+  available" case).
 - **Schema is the committed schema** (manifest union, not footer
-  sampling); files written before a column was appended are padded with
-  nulls on read, matching the batch read path.
-
-At scale the planner work per batch is a manifest-set difference on the
-driver (KBs of JSON) and the read work is proportional to the files each
-commit landed — tailing a 100 TB table costs the day's appends, not the
-table.
+  sampling).
 """
 
 from __future__ import annotations
 
-import json
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
+
+from .log_tail import FileSpec, LogTailReader, LogTailSource
+from .manifest_table import (
+    _live_files,
+    _load_meta,
+    table_schema,
+    table_versions,
 )
 
-from .manifest_table import _live_files, _load_meta, table_schema, table_versions
 
+class ManifestStreamReader(LogTailReader):
+    format_name = "manifest_stream"
+    stream_schema = staticmethod(table_schema)
 
-class _ManifestFile(InputPartition):
-    def __init__(self, path: str, schema_json: str):
-        self.path = path
-        self.schema_json = schema_json
+    def positions(self) -> list[int]:
+        return table_versions(self._path)
 
-
-class ManifestStreamDataSource(DataSource):
-    """Manifest table as a streaming source (format name
-    ``manifest_stream``)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "manifest_stream"
-
-    def schema(self):
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("manifest_stream requires .option('path', ...)")
-        return table_schema(path)
-
-    def streamReader(self, schema) -> "ManifestStreamReader":
-        return ManifestStreamReader(self.options, schema)
-
-
-class ManifestStreamReader(DataSourceStreamReader):
-    def __init__(self, options, schema):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("manifest_stream requires .option('path', ...)")
-        self._skip_changes = (
-            str(options.get("skipChangeCommits", "false")).lower() == "true"
-        )
-        starting = options.get("startingVersion")
-        if starting is None:
-            self._first = 0
-        elif str(starting).lower() == "latest":
-            # consume only commits made AFTER the stream starts (Delta's
-            # startingVersion=latest): the initial offset is the current
-            # head, resolved once here so a checkpointed restart keeps it
-            versions = table_versions(self._path)
-            self._first = (versions[-1] + 1) if versions else 0
-        else:
-            self._first = int(starting)
-        self._schema_json = schema.json()
-
-    def initialOffset(self) -> dict:
-        # the offset names the last CONSUMED version; the first batch
-        # therefore covers versions >= startingVersion
-        return {"version": self._first - 1}
-
-    def latestOffset(self) -> dict:
-        versions = table_versions(self._path)
-        if not versions:
-            raise ValueError(f"no committed version at {self._path}")
-        return {"version": versions[-1]}
-
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
+    def partitions(self, start: dict, end: dict) -> Sequence[FileSpec]:
         lo, hi = int(start["version"]), int(end["version"])
-        parts: list[InputPartition] = []
+        parts: list[FileSpec] = []
         prev_live: set[str] | None = None
         versions = table_versions(self._path)
         for v in versions:
@@ -118,22 +58,17 @@ class ManifestStreamReader(DataSourceStreamReader):
                 elif v - 1 in versions:
                     prev_live = set(_live_files(self._path, v - 1))
                 else:
-                    # the baseline manifest was vacuumed: carried files are
-                    # indistinguishable from added ones — fail, don't
-                    # silently re-emit the whole table (Delta's
-                    # "offset no longer available" case)
                     raise ValueError(
                         f"cannot resume from version {v - 1} of "
                         f"{self._path}: its manifest was vacuumed; restart "
                         "the stream with a fresh checkpoint"
                     )
-            meta = _load_meta(self._path, v)
-            after = meta["files"]
+            after = _load_meta(self._path, v)["files"]
             removed = prev_live - set(after)
             added = [f for f in after if f not in prev_live]
             prev_live = set(after)
-            if removed and not self._skip_changes:
-                raise ValueError(
+            if removed:
+                self._change_commit(
                     f"version {v} of {self._path} removed {len(removed)} "
                     "file(s) (DELETE/UPDATE/MERGE/OPTIMIZE): not an "
                     "append-only stream. Set "
@@ -141,35 +76,16 @@ class ManifestStreamReader(DataSourceStreamReader):
                     "commits, or consume row-level changes with the batch "
                     "read_changes feed."
                 )
-            if removed:
-                continue  # skipChangeCommits: rewrite versions contribute nothing
-            parts.extend(_ManifestFile(f, self._schema_json) for f in added)
+                continue
+            parts.extend(FileSpec(f) for f in added)
         return parts
 
-    def read(self, partition: _ManifestFile) -> Iterator:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
+class ManifestStreamDataSource(LogTailSource):
+    """Manifest table as a streaming source (format name
+    ``manifest_stream``)."""
 
-        schema = StructType.fromJson(json.loads(partition.schema_json))
-        target = to_arrow_schema(schema)
-        table = pq.read_table(partition.path)
-        # align to the committed schema: pre-evolution files pad new
-        # columns with nulls, exactly like the batch read path
-        cols = []
-        for field in target:
-            if field.name in table.column_names:
-                cols.append(table.column(field.name).cast(field.type))
-            else:
-                cols.append(pa.nulls(table.num_rows, field.type))
-        yield from pa.Table.from_arrays(cols, schema=target).to_batches()
-
-    def commit(self, end: dict) -> None:
-        # offsets live in the query checkpoint; manifests are immutable,
-        # so there is no source-side state to release
-        pass
+    reader = ManifestStreamReader
 
 
 def register_manifest_stream_source(spark: SparkSession) -> None:

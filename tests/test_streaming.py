@@ -745,26 +745,27 @@ def test_stream_state_partitions_env_and_default(spark, monkeypatch):
     assert spark.conf.get(key) == before
 
 
-def test_stream_tumbling_counts_state_partition_count_took_effect(spark):
-    """The drained query's shuffle width must really be the stream-state
-    value: with the env forcing 3 partitions, the lane's results stay
-    byte-identical to an unforced run (state partitioning is layout,
-    never semantics)."""
-    import os
+def test_stream_tumbling_counts_state_partition_count_took_effect(
+    spark, monkeypatch
+):
+    """The drained query's state really is partitioned by the
+    stream-state value: with the env forcing 3 partitions, the lane's
+    stateful aggregate reports 3 shuffle partitions in its progress, and
+    its results stay byte-identical to an unforced run (state
+    partitioning is layout, never semantics)."""
+    from species_range_data_pipeline_spark.plans import events
 
-    from species_range_data_pipeline_spark.plans.events import (
-        stream_tumbling_counts,
-    )
+    drain, drained = events.drain_available_now, []
 
-    forced = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    try:
-        os.environ["SPARK_GRAFT_STREAM_PARTITIONS"] = "3"
-        a = sorted(map(tuple, stream_tumbling_counts(spark, SF_SMOKE).collect()))
-        os.environ.pop("SPARK_GRAFT_STREAM_PARTITIONS")
-        b = sorted(map(tuple, stream_tumbling_counts(spark, SF_SMOKE).collect()))
-    finally:
-        if forced is not None:
-            os.environ["SPARK_GRAFT_STREAM_PARTITIONS"] = forced
-        else:
-            os.environ.pop("SPARK_GRAFT_STREAM_PARTITIONS", None)
+    def _recording_drain(*args, **kwargs):
+        drained.append(drain(*args, **kwargs))
+        return drained[-1]
+
+    monkeypatch.setattr(events, "drain_available_now", _recording_drain)
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "3")
+    a = sorted(map(tuple, events.stream_tumbling_counts(spark, SF_SMOKE).collect()))
+    (q,) = drained
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 3
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS")
+    b = sorted(map(tuple, events.stream_tumbling_counts(spark, SF_SMOKE).collect()))
     assert a == b and a
