@@ -949,6 +949,20 @@ def _read_files(
     return df
 
 
+def dv_step(before_live: dict, after_live: dict) -> tuple[list, list]:
+    """One log step's (removed, added) relative paths from the live maps
+    of the snapshots around it: the files whose (path, DV uid) changed.
+    A file whose deletion vector changed is on BOTH sides — under the
+    old mask and under the new — so a merge-on-read DELETE nets to
+    exactly its newly masked rows.  Both change feeds walk with this."""
+    gone = object()
+    b_uid = {rel: _dv_uid(a) for rel, a in before_live.items()}
+    a_uid = {rel: _dv_uid(a) for rel, a in after_live.items()}
+    removed = sorted(r for r, u in b_uid.items() if a_uid.get(r, gone) != u)
+    added = sorted(r for r, u in a_uid.items() if b_uid.get(r, gone) != u)
+    return removed, added
+
+
 def read_delta_changes(
     spark: SparkSession,
     path: str,
@@ -958,32 +972,22 @@ def read_delta_changes(
     """Row-level change data feed over a FOREIGN ``_delta_log``: every
     insert and delete the table saw in versions
     ``(from_version, to_version]``, as the table's columns plus
-    ``_change_type`` ('insert' | 'delete') and ``_commit_version`` —
-    the engine's ``manifest_table.read_changes`` algebra replayed over
-    the Delta layout (VERDICT r16 next #4), no ``_change_data`` files
-    required.
+    ``_change_type`` ('insert' | 'delete') and ``_commit_version``, no
+    ``_change_data`` files required.
 
-    Each version step diffs the live (path, DV uid) sets: a file whose
-    deletion vector CHANGED counts as removed-under-the-old-DV plus
-    added-under-the-new-DV, so a merge-on-read DELETE surfaces exactly
-    its newly-masked rows (the carried rows cancel in the multiset
-    diff).  Pure appends stream the new files straight through; pure
-    removals stream the dropped files as deletes; rewrites take the
-    signed-union + ONE groupBy net multiset difference (NULL-safe,
-    one shuffle — the manifest feed's reasoning, same code shape).
-    An UPDATE therefore appears as delete-of-pre-image plus
-    insert-of-post-image, Delta's own CDF-less fallback semantics.
-
-    Cost scales with data TOUCHED, not table size: only files added,
-    removed, or DV-rewritten by each commit are read.  Both sides of a
-    step read under the step's committed schema (missing columns ->
-    null, the nullable-add rule).  MapType columns cannot be grouped,
-    so tables holding one raise rather than returning a wrong diff.
-    Only JSON-visible versions are resolvable (a checkpoint is a
-    snapshot, not a step history) — the same honest cut as
-    ``delta_table_history``.
+    Each version step is ``dv_step`` over the replayed snapshots (each
+    version replayed once), folded by the shared change-feed algebra
+    (``log_tail.batch_changes``): an UPDATE appears as
+    delete-of-pre-image plus insert-of-post-image, Delta's own CDF-less
+    fallback semantics.  Only files a step touched are read, each side
+    under the step's committed schema and column mapping (RENAME/DROP
+    histories resolve by physical name).  Only JSON-visible versions
+    are resolvable (a checkpoint is a snapshot, not a step history) —
+    the same honest cut as ``delta_table_history``.
     """
-    from pyspark.sql.types import MapType, StructType
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    from .log_tail import batch_changes
 
     versions, _ = _scan_log_dir(path)
     if not versions:
@@ -998,105 +1002,42 @@ def read_delta_changes(
         raise ValueError(
             f"to_version {to_v} must exceed from_version {from_version}"
         )
-    steps = []
-    prev = from_version
-    for v in versions:
-        if from_version < v <= to_v:
-            steps.append((prev, v))
-            prev = v
 
-    _GONE = object()
-    out: DataFrame | None = None
-    for before_v, v in steps:
-        before = _replay(path, before_v)
-        after = _replay(path, v)
-        schema = StructType.fromJson(json.loads(after["schema_json"]))
-        if any(isinstance(f.dataType, MapType) for f in schema.fields):
-            raise NotImplementedError(
-                "change feed needs group-by-all-columns; MapType columns"
-                " are not comparable in Spark — drop or cast the map"
-                " column"
-            )
-        pcols = after["partition_cols"]
-        # physical names are stable across RENAMEs, so the step's after-
-        # snapshot mapping resolves BOTH sides' files correctly
-        mapping = _column_mapping(after, path)
-        step_field_ids = _mapping_field_ids(after, path)
-        b_uid = {rel: _dv_uid(a) for rel, a in before["live"].items()}
-        a_uid = {rel: _dv_uid(a) for rel, a in after["live"].items()}
-        removed = sorted(
-            rel for rel, uid in b_uid.items() if a_uid.get(rel, _GONE) != uid
-        )
-        added = sorted(
-            rel for rel, uid in a_uid.items() if b_uid.get(rel, _GONE) != uid
-        )
-        if not removed and not added:
-            continue
-        cols = schema.names
+    def steps():
+        before = _replay(path, from_version)
+        for v in versions:
+            if not from_version < v <= to_v:
+                continue
+            after = _replay(path, v)
+            schema = StructType.fromJson(json.loads(after["schema_json"]))
+            # physical names are stable across RENAMEs, so the step's
+            # after-snapshot mapping resolves BOTH sides' files
+            mapping = _column_mapping(after, path)
+            field_ids = _mapping_field_ids(after, path)
 
-        def _side(live: dict, rels: list[str]) -> DataFrame:
-            return _read_files(
-                spark,
-                path,
-                schema,
-                pcols,
-                {rel: live[rel] for rel in rels},
-                [os.path.join(path, rel) for rel in rels],
-                mapping=mapping,
-                field_ids=step_field_ids,
-            )
-
-        if not removed:
-            step = _side(after["live"], added).select(
-                *cols, F.lit("insert").alias("_change_type")
-            )
-        elif not added:
-            step = _side(before["live"], removed).select(
-                *cols, F.lit("delete").alias("_change_type")
-            )
-        else:
-            r = _side(before["live"], removed).select(
-                *cols, F.lit(-1).alias("__sign")
-            )
-            a = _side(after["live"], added).select(
-                *cols, F.lit(1).alias("__sign")
-            )
-            net = (
-                r.unionByName(a)
-                .groupBy(*cols)
-                .agg(F.sum("__sign").alias("__net"))
-            )
-            step = (
-                net.where(F.col("__net") != 0)
-                .select(
-                    *cols,
-                    F.when(F.col("__net") > 0, F.lit("insert"))
-                    .otherwise(F.lit("delete"))
-                    .alias("_change_type"),
-                    F.explode(
-                        F.sequence(F.lit(1), F.abs(F.col("__net")))
-                    ).alias("__i"),
+            def side(live: dict, rels: list[str]) -> DataFrame | None:
+                if not rels:
+                    return None
+                return _read_files(
+                    spark,
+                    path,
+                    schema,
+                    after["partition_cols"],
+                    {rel: live[rel] for rel in rels},
+                    [os.path.join(path, rel) for rel in rels],
+                    mapping=mapping,
+                    field_ids=field_ids,
                 )
-                .drop("__i")
-            )
-        step = step.withColumn("_commit_version", F.lit(v).cast("int"))
-        out = step if out is None else out.unionByName(
-            step, allowMissingColumns=True
-        )
-    if out is None:
-        # every step in range was metadata-only: empty feed with the
-        # to-version's schema + the change columns
-        snap = _replay(path, to_v)
-        from pyspark.sql.types import StructType as _ST
 
-        schema = _ST.fromJson(json.loads(snap["schema_json"]))
-        empty = spark.createDataFrame([], schema)
-        out = empty.select(
-            "*",
-            F.lit("insert").alias("_change_type"),
-            F.lit(0).cast("int").alias("_commit_version"),
-        ).limit(0)
-    return out
+            removed, added = dv_step(before["live"], after["live"])
+            yield v, schema, side(before["live"], removed), side(
+                after["live"], added
+            )
+            before = after
+
+    return batch_changes(
+        spark, steps(), StructField("_commit_version", IntegerType(), False)
+    )
 
 
 def delta_version_as_of(path: str, timestamp: float) -> int:

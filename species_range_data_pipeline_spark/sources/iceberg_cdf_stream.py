@@ -2,9 +2,9 @@
 
 ``sources/iceberg_stream.py`` tails the snapshot log as an append-only
 stream; this module is the Iceberg twin of
-``sources/delta_cdf_stream.py``: the batch feed's manifest-walk
-multiset-diff algebra (``iceberg_log.iceberg_read_changes``) on the
-shared change-feed contract (``sources/log_tail.py``):
+``sources/delta_cdf_stream.py``: the streaming half of the change-feed
+algebra in ``sources/log_tail.py``, whose batch half is
+``iceberg_log.iceberg_read_changes``:
 
     register_iceberg_cdf_stream_source(spark)
     stream = (spark.readStream.format("iceberg_cdf_tail")
@@ -12,8 +12,9 @@ shared change-feed contract (``sources/log_tail.py``):
 
 - **Offsets are snapshot ids** (the ``iceberg_tail`` offsets); the
   version column is ``_snapshot_id`` (bigint).
-- **Step semantics match the batch feed exactly**: each step diffs the
-  live DATA-file sets and the POSITION-DELETE coverage.  Pure appends
+- **Steps are the batch feed's**: both walk the log with
+  ``iceberg_log._SnapshotRange.change_steps``, which diffs the live
+  DATA-file sets and the POSITION-DELETE coverage.  Pure appends
   are masked by the current delete files; pure removals stream under
   the OLD delete set; a delete-coverage change puts the affected files
   on BOTH sides (old deletes vs new), so the step folds to one net-diff
@@ -45,8 +46,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import SparkSession
 
-from .iceberg_log import _resolve
-from .iceberg_stream import IcebergTailStreamReader, _SnapshotRange
+from .iceberg_log import _SnapshotRange
+from .iceberg_stream import IcebergTailStreamReader
 from .log_tail import (
     ChangeStep,
     FileSpec,
@@ -66,41 +67,24 @@ def _cdf_schema(table_schema):
 
 class IcebergCdfTailStreamReader(IcebergTailStreamReader):
     format_name = "iceberg_cdf_tail"
-    _role = "feed"
+    _role = "streaming change feed"
 
     @staticmethod
     def stream_schema(path: str):
         return _cdf_schema(IcebergTailStreamReader.stream_schema(path))
-
-    def _touched_by(self, delete_files: set[str]) -> set[str]:
-        import pyarrow.parquet as pq
-
-        touched: set[str] = set()
-        for df in delete_files:
-            col = pq.read_table(df, columns=["file_path"]).column("file_path")
-            touched |= {_resolve(self._path, str(v)) for v in col.unique()}
-        return touched
 
     def partitions(self, start: dict, end: dict) -> Sequence[ChangeStep]:
         log = _SnapshotRange(
             self._path, start.get("snapshot_id"), end.get("snapshot_id")
         )
         parts: list[ChangeStep] = []
-        for snap_id, prev, cur in log.steps(refuse_eq_deletes=True):
-            (prev_data, prev_dels), (cur_data, cur_dels) = prev, cur
-            changed_dels = (cur_dels - prev_dels) | (prev_dels - cur_dels)
-            affected = (
-                self._touched_by(changed_dels) if changed_dels else set()
-            )
-            both = affected & prev_data & cur_data
-            removed = sorted((prev_data - cur_data) | both)
-            added = sorted((cur_data - prev_data) | both)
-            for f in added:
-                log.probe(f, self._role)
+        for snap_id, removed, added, old_dels, new_dels in log.change_steps(
+            self._role
+        ):
             parts += change_partitions(
                 snap_id,
-                [FileSpec(f, mask=tuple(sorted(prev_dels))) for f in removed],
-                [FileSpec(f, mask=tuple(sorted(cur_dels))) for f in added],
+                [FileSpec(f, mask=tuple(sorted(old_dels))) for f in removed],
+                [FileSpec(f, mask=tuple(sorted(new_dels))) for f in added],
             )
         return parts
 

@@ -63,6 +63,7 @@ from __future__ import annotations
 import json
 import os
 import re
+from functools import cached_property
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -868,6 +869,134 @@ def read_iceberg_table(
     return df if pred is None else df.where(pred)
 
 
+def _linear_snapshots(meta: dict, path: str) -> list[dict]:
+    """The metadata's snapshot list, refused unless it is the linear
+    history: every snapshot's parent (when recorded) is its list
+    predecessor."""
+    snaps = list(meta.get("snapshots") or [])
+    ids = [s["snapshot-id"] for s in snaps]
+    for i, s in enumerate(snaps):
+        parent = s.get("parent-snapshot-id")
+        if parent is not None and (i == 0 or parent != ids[i - 1]):
+            raise NotImplementedError(
+                f"snapshot {s['snapshot-id']} of {path!r} has parent"
+                f" {parent}, not its predecessor in the snapshot list —"
+                " branched histories are not readable as a linear log."
+            )
+    return snaps
+
+
+class _SnapshotRange:
+    """The snapshots after ``start`` up to ``end`` (ids; ``None`` = before
+    the first) of one table's linear history: the step walk of the
+    append tail (``iceberg_stream``) and of both change feeds."""
+
+    def __init__(self, path: str, start, end):
+        self.path = path
+        self.meta = _load_metadata(path)
+        self.snaps = _linear_snapshots(self.meta, path)
+        self.lo, self.hi = self._index_of(start), self._index_of(end)
+
+    def _index_of(self, snapshot_id) -> int:
+        """List index of ``snapshot_id``; -1 for the before-first None."""
+        if snapshot_id is None:
+            return -1
+        ids = [s["snapshot-id"] for s in self.snaps]
+        if snapshot_id not in ids:
+            raise ValueError(
+                f"snapshot {snapshot_id} of {self.path} is no longer in"
+                " the metadata (expired?); restart the stream with a"
+                " fresh checkpoint"
+            )
+        return ids.index(snapshot_id)
+
+    def _state(self, i: int, refuse_eq_deletes: bool):
+        """(live data files, live delete files) of snapshot ``i``."""
+        data, dels = set(), set()
+        if i < 0:
+            return data, dels
+        for kind, d, _sid, _seq in _walk_entries(self.path, self.snaps[i]):
+            if kind == "eqdel" and refuse_eq_deletes:
+                # value-keyed coverage is not position-diffable: which
+                # rows an equality delete masks per step needs value-level
+                # resolution, and treating it as a position delete would
+                # mis-read its (value, not position) rows
+                raise NotImplementedError(
+                    f"equality-delete file {d['file_path']!r} in the"
+                    " change-feed range; the Iceberg feed diffs"
+                    " position-delete coverage only — read snapshots"
+                    " directly (read_iceberg_table applies equality"
+                    " deletes) or compact the deletes away."
+                )
+            (data if kind == "data" else dels).add(
+                _resolve(self.path, d["file_path"])
+            )
+        return data, dels
+
+    def steps(self, refuse_eq_deletes: bool = False):
+        """(snapshot id, previous state, state) per snapshot in range."""
+        prev = self._state(self.lo, refuse_eq_deletes)
+        for i in range(self.lo + 1, self.hi + 1):
+            cur = self._state(i, refuse_eq_deletes)
+            yield self.snaps[i]["snapshot-id"], prev, cur
+            prev = cur
+
+    def _touched_by(self, delete_files: set[str]) -> set[str]:
+        """The data files ``delete_files`` name — read from their
+        ``file_path`` column driver-side (delete files are log-scoped
+        by the merge-on-read contract)."""
+        import pyarrow.parquet as pq
+
+        touched: set[str] = set()
+        for df in delete_files:
+            col = pq.read_table(df, columns=["file_path"]).column("file_path")
+            touched |= {_resolve(self.path, str(v)) for v in col.unique()}
+        return touched
+
+    def change_steps(self, role: str):
+        """(snapshot id, removed files, added files, old delete files,
+        new delete files) per snapshot in range: the live DATA-file diff,
+        plus every file whose POSITION-DELETE coverage changed on both
+        sides — read under the old deletes and under the new — so a
+        merge-on-read DELETE nets to exactly its newly masked rows."""
+        for snap_id, prev, cur in self.steps(refuse_eq_deletes=True):
+            (prev_data, prev_dels), (cur_data, cur_dels) = prev, cur
+            both = self._touched_by(prev_dels ^ cur_dels) & prev_data & cur_data
+            removed = sorted((prev_data - cur_data) | both)
+            added = sorted((cur_data - prev_data) | both)
+            for f in removed + added:
+                self.probe(f, role)
+            yield snap_id, removed, added, prev_dels, cur_dels
+
+    @cached_property
+    def _id_cols(self) -> set[str]:
+        return {
+            by_src["name"]
+            for pairs in _identity_partition_fields(self.meta).values()
+            for _pname, source_id in pairs
+            for by_src in _current_schema(self.meta, self.path)["fields"]
+            if by_src["id"] == source_id
+        }
+
+    def probe(self, fpath: str, role: str) -> None:
+        """Migrated-layout guard: the step readers null-pad columns
+        missing from a file, which is WRONG for identity-partition
+        source columns (their values live in the manifest tuples) — one
+        metadata-sized footer read per touched file, driver-side."""
+        if not self._id_cols:
+            return
+        import pyarrow.parquet as pq
+
+        missing = self._id_cols - set(pq.read_schema(fpath).names)
+        if missing:
+            raise NotImplementedError(
+                f"data file {fpath!r} lacks identity-partition"
+                f" column(s) {sorted(missing)} (migrated layout);"
+                f" the {role} cannot restore manifest partition values —"
+                " read snapshots with read_iceberg_table, which does."
+            )
+
+
 def iceberg_read_changes(
     spark: SparkSession,
     path: str,
@@ -877,160 +1006,53 @@ def iceberg_read_changes(
     """Row-level change data feed between Iceberg snapshots: every
     insert and delete the table saw after ``from_snapshot_id`` up to
     ``to_snapshot_id`` (default: current), as the table's columns plus
-    ``_change_type`` ('insert' | 'delete') and ``_snapshot_id`` — the
-    Delta-layout feed's twin (``delta_log.read_delta_changes``), built
+    ``_change_type`` ('insert' | 'delete') and ``_snapshot_id``, built
     from the manifest walk alone.
 
-    Each snapshot step diffs (a) the live DATA-file sets and (b) the
-    POSITION-DELETE-file sets: a data file whose delete coverage
-    changed (a new delete file names it) is read under the old delete
-    set on the removed side and under the new set on the added side,
-    so a merge-on-read DELETE surfaces exactly its newly-masked rows
-    (carried rows cancel in the signed-union net multiset diff — the
-    same one-shuffle algebra as the manifest and Delta feeds).  Which
-    data files a changed delete file touches is resolved by reading
-    its ``file_path`` column driver-side (delete files are log-scoped
-    by the MoR contract).
+    Each snapshot step is ``_SnapshotRange.change_steps`` — the walk the
+    ``iceberg_cdf_tail`` stream uses — folded by the shared change-feed
+    algebra (``log_tail.batch_changes``); each side is one parquet scan
+    under the current schema, masked by its side's position deletes.
 
-    Boundaries, loud: the metadata's ``snapshots`` list is treated as
-    the LINEAR history (branched/tagged histories whose
-    parent-snapshot-id chain disagrees with list order are refused);
-    equality deletes are refused by the shared manifest walk; MapType
-    columns cannot be grouped and raise; migrated layouts (identity
-    source columns absent from the files) are not diffable here.
-
-    Cost scales with data TOUCHED per step, not table size — measured
-    for the Delta twin in SCALE.md rule 62; the shape here is
-    identical.
+    Boundaries, loud: branched histories, equality deletes in the range,
+    and migrated layouts (identity source columns absent from a touched
+    file) are refused.
     """
-    from pyspark.sql.types import MapType
+    from pyspark.sql.types import LongType, StructField
+
+    from .log_tail import batch_changes
 
     meta = _load_metadata(path)
-    snaps = list(meta.get("snapshots") or [])
-    ids = [s["snapshot-id"] for s in snaps]
-    # linear-history guard: every snapshot's parent (when recorded)
-    # must be its list predecessor
-    for i, s in enumerate(snaps):
-        parent = s.get("parent-snapshot-id")
-        if parent is not None and (i == 0 or parent != ids[i - 1]):
-            raise NotImplementedError(
-                f"snapshot {s['snapshot-id']} of {path!r} has parent"
-                f" {parent}, which is not its predecessor in the"
-                " snapshot list — branched histories are not diffable"
-                " as a linear feed."
-            )
+    ids = [s["snapshot-id"] for s in _linear_snapshots(meta, path)]
     if to_snapshot_id is None:
         to_snapshot_id = meta.get("current-snapshot-id")
     if from_snapshot_id not in ids or to_snapshot_id not in ids:
         raise ValueError(f"snapshot ids must be among {ids}")
-    i_from, i_to = ids.index(from_snapshot_id), ids.index(to_snapshot_id)
-    if i_to <= i_from:
+    if ids.index(to_snapshot_id) <= ids.index(from_snapshot_id):
         raise ValueError(
             f"to_snapshot_id {to_snapshot_id} must come after"
             f" from_snapshot_id {from_snapshot_id}"
         )
-    schema_dict = _current_schema(meta, path)
-    schema = _struct_type(schema_dict)
-    if any(isinstance(f.dataType, MapType) for f in schema.fields):
-        raise NotImplementedError(
-            "change feed needs group-by-all-columns; MapType columns are"
-            " not comparable in Spark — drop or cast the map column"
-        )
-    cols = schema.names
+    schema = _struct_type(_current_schema(meta, path))
 
-    def _state(snap: dict) -> tuple[set[str], set[str]]:
-        data, dels = set(), set()
-        for kind, d, _sid, _seq in _walk_entries(path, snap):
-            if kind == "eqdel":
-                # diffing delete COVERAGE needs value-level resolution
-                # of which rows each equality delete masks per step —
-                # not implemented; silently treating it as a position
-                # delete would mis-read its (value, not position) rows
-                raise NotImplementedError(
-                    f"equality-delete file {d['file_path']!r} in the"
-                    " change-feed range; the Iceberg feed diffs"
-                    " position-delete coverage only — read snapshots"
-                    " directly (read_iceberg_table applies equality"
-                    " deletes) or compact the deletes away."
-                )
-            (data if kind == "data" else dels).add(
-                _resolve(path, d["file_path"])
-            )
-        return data, dels
-
-    def _touched_by(delete_files: set[str]) -> set[str]:
-        import pyarrow.parquet as pq
-
-        touched: set[str] = set()
-        for df in delete_files:
-            col = pq.read_table(df, columns=["file_path"]).column(
-                "file_path"
-            )
-            touched |= {_resolve(path, str(v)) for v in col.unique()}
-        return touched
-
-    def _side(files: list[str], delete_files: set[str]) -> DataFrame:
+    def side(files: list[str], delete_files: set[str]) -> DataFrame | None:
+        if not files:
+            return None
         df = spark.read.schema(schema).parquet(*files)
         if delete_files:
             df = _apply_position_deletes(spark, df, sorted(delete_files))
         return df
 
-    out: DataFrame | None = None
-    prev_data, prev_dels = _state(snaps[i_from])
-    for i in range(i_from + 1, i_to + 1):
-        cur_data, cur_dels = _state(snaps[i])
-        changed_dels = (cur_dels - prev_dels) | (prev_dels - cur_dels)
-        affected = _touched_by(changed_dels) if changed_dels else set()
-        removed = sorted((prev_data - cur_data) | (affected & prev_data & cur_data))
-        added = sorted((cur_data - prev_data) | (affected & prev_data & cur_data))
-        snap_id = ids[i]
-        if removed or added:
-            if not removed:
-                step = _side(added, cur_dels).select(
-                    *cols, F.lit("insert").alias("_change_type")
-                )
-            elif not added:
-                step = _side(removed, prev_dels).select(
-                    *cols, F.lit("delete").alias("_change_type")
-                )
-            else:
-                r = _side(removed, prev_dels).select(
-                    *cols, F.lit(-1).alias("__sign")
-                )
-                a = _side(added, cur_dels).select(
-                    *cols, F.lit(1).alias("__sign")
-                )
-                net = (
-                    r.unionByName(a)
-                    .groupBy(*cols)
-                    .agg(F.sum("__sign").alias("__net"))
-                )
-                step = (
-                    net.where(F.col("__net") != 0)
-                    .select(
-                        *cols,
-                        F.when(F.col("__net") > 0, F.lit("insert"))
-                        .otherwise(F.lit("delete"))
-                        .alias("_change_type"),
-                        F.explode(
-                            F.sequence(F.lit(1), F.abs(F.col("__net")))
-                        ).alias("__i"),
-                    )
-                    .drop("__i")
-                )
-            step = step.withColumn(
-                "_snapshot_id", F.lit(snap_id).cast("long")
-            )
-            out = step if out is None else out.unionByName(step)
-        prev_data, prev_dels = cur_data, cur_dels
-    if out is None:
-        empty = spark.createDataFrame([], schema)
-        out = empty.select(
-            "*",
-            F.lit("insert").alias("_change_type"),
-            F.lit(0).cast("long").alias("_snapshot_id"),
-        ).limit(0)
-    return out
+    log = _SnapshotRange(path, from_snapshot_id, to_snapshot_id)
+    steps = (
+        (snap_id, schema, side(removed, old_dels), side(added, new_dels))
+        for snap_id, removed, added, old_dels, new_dels in log.change_steps(
+            "batch change feed"
+        )
+    )
+    return batch_changes(
+        spark, steps, StructField("_snapshot_id", LongType(), False)
+    )
 
 
 def iceberg_snapshot_as_of(path: str, timestamp: float) -> int:

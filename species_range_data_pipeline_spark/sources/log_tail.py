@@ -49,6 +49,17 @@ log: how to list positions (``positions``), what each step in a range
 added or removed and whether it is a change commit (``partitions``,
 built from ``FileSpec`` / ``change_partitions``), and how to load one
 file with its row mask (``_load``).  Format guards live in the adapter.
+
+**The batch half.**  ``batch_changes`` is the same algebra for the
+batch feeds (``manifest_table.read_changes``,
+``delta_log.read_delta_changes``, ``iceberg_log.iceberg_read_changes``),
+over the format's own JVM reads: each step's removed and added files
+come from the walk its ``*_cdf_tail`` twin uses, a pure step passes its
+one side through, and a mixed step is a signed union + ONE ``groupBy``
+over all columns — NULL-safe (grouping treats NULLs as equal, so
+NULL-bearing carried rows cancel where a join's equality would not)
+and one shuffle over touched files only.  Steps union by name, so
+columns added mid-range are null-padded on the steps before them.
 """
 
 from __future__ import annotations
@@ -89,6 +100,54 @@ def cdf_schema(table_schema, version_field):
             version_field,
         ]
     )
+
+
+def batch_changes(spark, steps, version_field):
+    """The batch change feed over ``steps``: ``(version, schema,
+    removed, added)`` per log step, each side a DataFrame of the files
+    that step removed or added (``None`` when it touched none) under the
+    step's committed ``schema``.  An empty range yields an empty frame
+    under ``cdf_schema`` of the last step's schema."""
+    from pyspark.sql import functions as F
+
+    out = schema = None
+    for version, schema, removed, added in steps:
+        cdf_schema(schema, version_field)  # refuses MapType columns
+        if removed is None and added is None:
+            continue
+        cols = schema.names
+        if removed is None or added is None:
+            step = (removed if added is None else added).select(
+                *cols,
+                F.lit("delete" if added is None else "insert").alias(
+                    "_change_type"
+                ),
+            )
+        else:
+            net = (
+                removed.select(*cols, F.lit(-1).alias("__sign"))
+                .unionByName(added.select(*cols, F.lit(1).alias("__sign")))
+                .groupBy(*cols)
+                .agg(F.sum("__sign").alias("__net"))
+            )
+            step = net.where(F.col("__net") != 0).select(
+                *cols,
+                F.when(F.col("__net") > 0, F.lit("insert"))
+                .otherwise(F.lit("delete"))
+                .alias("_change_type"),
+                F.explode(F.sequence(F.lit(1), F.abs(F.col("__net")))).alias(
+                    "__i"
+                ),
+            ).drop("__i")
+        step = step.withColumn(
+            version_field.name, F.lit(version).cast(version_field.dataType)
+        )
+        out = step if out is None else out.unionByName(
+            step, allowMissingColumns=True
+        )
+    if out is None:
+        return spark.createDataFrame([], cdf_schema(schema, version_field))
+    return out
 
 
 def conform(table, schema, pvalues: dict):

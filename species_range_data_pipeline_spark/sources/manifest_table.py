@@ -1252,27 +1252,17 @@ def read_changes(
 
     This is Delta's CDF read surface reconstructed from the commit log
     alone — no change files are written at DML time.  Each version step is
-    a file-set diff (removed = before − after, added = after − before) and
-    the row-level changes are the **net multiset difference** between the
-    removed and added files: rows a rewrite carried through unchanged
-    cancel out, deleted rows surface with ``_change_type='delete'``,
-    inserted rows with ``'insert'``.  An UPDATE therefore appears as the
-    delete of the pre-image plus the insert of the post-image (the
-    version-diff semantics Delta itself falls back to without CDF files).
-
-    Cost scales with data *touched*, not table size: only the files added
-    or removed by each commit are read — a pure append diffs nothing and
+    a file-set diff (removed = before − after, added = after − before),
+    folded by the shared change-feed algebra (``log_tail.batch_changes``):
+    rows a rewrite carried through unchanged cancel, and an UPDATE appears
+    as the delete of the pre-image plus the insert of the post-image.
+    Only the files each commit added or removed are read — a pure append
     streams the new files straight through (the ``read_version_delta``
-    fast path), and a surgical DELETE reads just the files the skipping
-    indexes could not clear when it ran.  The multiset diff is one
-    group-by-all-columns per side, shuffled over touched files only.
-
-    Columns of MapType cannot be grouped (Spark has no map equality), so
-    tables holding one raise ``NotImplementedError`` rather than returning
-    a wrong diff.
+    fast path) — each side under the step's committed schema.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import MapType, StructType
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    from .log_tail import batch_changes
 
     versions = table_versions(path)
     to_v = versions[-1] if to_version is None else to_version
@@ -1280,87 +1270,28 @@ def read_changes(
         raise ValueError(f"versions must be in {versions}")
     if to_v <= from_version:
         raise ValueError(f"to_version {to_v} must exceed from_version {from_version}")
-    steps = []
-    prev = from_version
-    for v in versions:
-        if from_version < v <= to_v:
-            steps.append((prev, v))
-            prev = v
-    out: DataFrame | None = None
-    for before_v, v in steps:
-        meta = _load_meta(path, v)
-        schema = StructType.fromJson(json.loads(meta["schema"]))
-        if any(isinstance(f.dataType, MapType) for f in schema.fields):
-            raise NotImplementedError(
-                "change feed needs group-by-all-columns; MapType columns "
-                "are not comparable in Spark — drop or cast the map column"
+
+    def steps():
+        before = set(_live_files(path, from_version))
+        for v in versions:
+            if not from_version < v <= to_v:
+                continue
+            meta = _load_meta(path, v)
+            schema = StructType.fromJson(json.loads(meta["schema"]))
+            after = set(meta["files"])
+            read = spark.read.schema(schema).parquet
+            removed, added = sorted(before - after), sorted(after - before)
+            yield (
+                v,
+                schema,
+                read(*removed) if removed else None,
+                read(*added) if added else None,
             )
-        before = set(_live_files(path, before_v))
-        after = meta["files"]
-        removed = sorted(before - set(after))
-        added = sorted(f for f in after if f not in before)
-        cols = schema.names
-        if not removed and not added:
-            continue
-        if not removed:
-            # pure append: every row of the new files is an insert, no diff
-            step = spark.read.schema(schema).parquet(*added).select(
-                *cols, F.lit("insert").alias("_change_type")
-            )
-        elif not added:
-            # pure removal (e.g. a DELETE emptied every rewritten file)
-            step = spark.read.schema(schema).parquet(*removed).select(
-                *cols, F.lit("delete").alias("_change_type")
-            )
-        else:
-            # rewrite commit: net multiset difference over touched files.
-            # Both sides read under the step's committed schema so columns
-            # align even across schema evolution (missing columns -> null).
-            # Signed union + ONE groupBy, not a full-outer join: groupBy
-            # treats NULLs as equal (a join's null-unsafe equality would
-            # stop NULL-bearing carried rows from cancelling and report
-            # them as phantom delete+insert pairs — guaranteed to occur
-            # after a metadata-only add_column), and it is one shuffle
-            # instead of two.
-            r = spark.read.schema(schema).parquet(*removed).select(
-                *cols, F.lit(-1).alias("__sign")
-            )
-            a = spark.read.schema(schema).parquet(*added).select(
-                *cols, F.lit(1).alias("__sign")
-            )
-            net = (
-                r.unionByName(a)
-                .groupBy(*cols)
-                .agg(F.sum("__sign").alias("__net"))
-            )
-            step = (
-                net.where(F.col("__net") != 0)
-                .select(
-                    *cols,
-                    F.when(F.col("__net") > 0, F.lit("insert"))
-                    .otherwise(F.lit("delete"))
-                    .alias("_change_type"),
-                    F.explode(
-                        F.sequence(F.lit(1), F.abs(F.col("__net")))
-                    ).alias("__i"),
-                )
-                .drop("__i")
-            )
-        step = step.withColumn("_commit_version", F.lit(v).cast("int"))
-        out = step if out is None else out.unionByName(
-            step, allowMissingColumns=True
-        )
-    if out is None:
-        # every step in range was a metadata-only commit: empty feed with
-        # the to-version's schema + the change columns
-        schema = table_schema(path, to_v)
-        empty = spark.createDataFrame([], schema)
-        out = empty.select(
-            "*",
-            F.lit("insert").alias("_change_type"),
-            F.lit(0).cast("int").alias("_commit_version"),
-        ).limit(0)
-    return out
+            before = after
+
+    return batch_changes(
+        spark, steps(), StructField("_commit_version", IntegerType(), False)
+    )
 
 
 def write_stream_manifest(

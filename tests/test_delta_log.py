@@ -1080,6 +1080,25 @@ def test_change_feed_replays_to_snapshot(spark, tmp_path):
             assert state == rows_at(to), (frm, to)
 
 
+def test_change_feed_replays_each_version_once(spark, tmp_path, monkeypatch):
+    """The batch feed's step walk carries each step's after-snapshot
+    forward as the next step's before: over v0..v3 that is one replay
+    per version, not two per step."""
+    from species_range_data_pipeline_spark.sources import delta_log
+
+    table = _feed_table(tmp_path, "feedonce")
+    calls = []
+    real = delta_log._replay
+
+    def counting(path, version=None):
+        calls.append(version)
+        return real(path, version)
+
+    monkeypatch.setattr(delta_log, "_replay", counting)
+    delta_log.read_delta_changes(spark, table, 0)
+    assert sorted(calls) == [0, 1, 2, 3]
+
+
 def test_midlog_rename_refused_add_column_reads(spark, tmp_path):
     """Schema evolution boundary: a mid-log RENAME (illegal without
     column mapping) is refused loudly instead of silently nulling the
@@ -1431,6 +1450,45 @@ def test_column_mapping_rename_and_drop_read(spark, tmp_path):
     assert {(r.y, r.val) for r in latest.collect()} == {
         (2020, "2020-1"), (2020, "2020-2"),
         (2021, "2021-3"), (2021, "2021-4"),
+    }
+
+
+def test_column_mapping_change_feed_across_rename(spark, tmp_path):
+    """The batch feed resolves name-mode column mapping per step: after
+    a RENAME v -> val (metadata only, no rows), a rewrite step's rows
+    carry their values under the renamed LOGICAL column, read from the
+    files' unchanged physical names on both sides of the diff."""
+    from species_range_data_pipeline_spark.sources.delta_log import (
+        read_delta_changes,
+    )
+
+    table = str(tmp_path / "cmfeed")
+    os.makedirs(table, exist_ok=True)
+    a0 = _data_file(
+        table, "y=2020/f0.parquet", {"col-1": [1, 2], "col-3": ["a", "b"]}
+    )
+    a0["add"]["partitionValues"] = {"col-2": "2020"}
+    f0 = [("k", "col-1", "long"), ("y", "col-2", "integer"),
+          ("v", "col-3", "string")]
+    _commit(table, 0, [_PROTOCOL_CM, _meta_mapped(f0, ["y"]), a0])
+    f1 = [("k", "col-1", "long"), ("y", "col-2", "integer"),
+          ("val", "col-3", "string")]
+    _commit(table, 1, [_meta_mapped(f1, ["y"])])  # RENAME v -> val
+    a2 = _data_file(
+        table, "y=2020/f1.parquet", {"col-1": [1, 5], "col-3": ["a", "e"]}
+    )
+    a2["add"]["partitionValues"] = {"col-2": "2020"}
+    _commit(
+        table,
+        2,
+        [a2, {"remove": {"path": "y=2020/f0.parquet", "dataChange": True}}],
+    )
+
+    feed = read_delta_changes(spark, table, 0)
+    assert feed.columns == ["k", "y", "val", "_change_type", "_commit_version"]
+    assert {tuple(r) for r in feed.collect()} == {
+        (2, 2020, "b", "delete", 2),
+        (5, 2020, "e", "insert", 2),
     }
 
 

@@ -1194,6 +1194,31 @@ def test_iceberg_change_feed_branched_history_refused(spark, tmp_path):
         iceberg_read_changes(spark, b.root, 100)
 
 
+def test_iceberg_change_feed_migrated_layout_refused(spark, tmp_path):
+    """A step adding a data file without its identity-partition source
+    column (migrated layout) is refused by the batch feed, as by the
+    snapshot reader and the CDF tail — reading on would emit the
+    manifest's year as a silent NULL."""
+    from species_range_data_pipeline_spark.sources.iceberg_log import (
+        iceberg_read_changes,
+    )
+
+    b = _Builder(str(tmp_path / "mig"))
+    f20 = b.data_file("f2020.parquet", [1], 2020)
+    m1 = b.manifest("m1.avro", [(1, f20, {"year": 2020}, 1, 0)])
+    b.snapshot(100, [m1])
+    stripped = os.path.join(b.root, "data", "stripped.parquet")
+    pq.write_table(
+        pa.table({"k": pa.array([7], pa.int64()), "v": pa.array(["a"])}),
+        stripped,
+    )
+    m2 = b.manifest("m2.avro", [(1, stripped, {"year": 2001}, 1, 0)])
+    b.snapshot(200, [m1, m2])
+    b.commit(current_snapshot_id=200)
+    with pytest.raises(NotImplementedError, match="identity-partition"):
+        iceberg_read_changes(spark, b.root, 100)
+
+
 # --- v2 equality deletes (r18) ---------------------------------------------
 
 

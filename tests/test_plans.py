@@ -715,9 +715,16 @@ def test_dedup_repeated_ngrams_one_gram_pass_no_hot_key_window(spark):
     partials) joined back — a join AQE can skew-split, a window cannot."""
     plan = _plan(spark, "dedup_repeated_ngrams")
     assert "documents.parquet" not in plan, plan  # gram set built once
-    # both gram-set references read one RDD (formatted explain lists
-    # each scan twice: tree + details)
-    assert plan.count("Scan ExistingRDD") == 4, plan
+    # both gram-set references read one RDD: exactly two RDD-scan leaves
+    # in the physical plan, over the same materialized RDD
+    df = QUERIES["dedup_repeated_ngrams"](spark, SF_CORRECT)
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    rdd_ids = [
+        leaves.apply(i).rdd().id()
+        for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "RDDScanExec"
+    ]
+    assert len(rdd_ids) == 2 and len(set(rdd_ids)) == 1, rdd_ids
     assert "Window" not in plan, plan
     assert "Join" in plan, plan
 
