@@ -399,49 +399,12 @@ def main() -> None:
     except ValueError:
         sf = tail
 
-    # The headline set GROWS across rounds (24 in r3 -> 28 now); the raw
-    # total is therefore not round-comparable.  Emit the r3-comparable
-    # subtotal alongside so a total-vs-total read does not mistake added
-    # coverage for a regression.
-    r3_set = {
-        "flagship_threshold_rollup", "q1_pricing_summary",
-        "q3_shipping_priority", "q5_region_volume", "q10_returned_revenue",
-        "window_topk_per_group", "agg_distinct", "agg_cube",
-        "join_anti_idempotent", "join_asof", "dedup_minhash_lsh",
-        "text_quality", "cosine_topk", "ev_sessionization",
-        "geo_dissolve_area", "q21_suppliers_kept_waiting", "merge_upsert",
-        "ev_gapfill", "basket_brand_pairs", "graph_pagerank",
-        "mv_incremental_refresh", "text_bigram_lm", "text_decontaminate",
-        "geo_spatial_join_bin",
-    }
-    r4_set = r3_set | {
-        "doc_pack_sequences", "corpus_pipeline_summary", "retrieval_rrf_fusion",
-        "dedup_substring_cut", "dedup_paragraphs", "join_interval_overlap",
-    }
-    # r7 grew the set again (PQ ANN, simhash, metric geo, multimodal);
-    # r4_comparable_total remains the round-over-round comparison basis.
-    # Streaming rows are judged by RATIO to the same-run graph_pagerank
-    # median, never by absolutes (BASELINE.md normalization rule: their
-    # cost is microbatch/checkpoint floor, and same-tree absolutes
-    # disagree 1.5x across sessions).  Publish the ratios in the
-    # artifact so the judgment needs no side script (VERDICT r12 #8).
-    streaming_normalized: dict[str, float] = {}
-    _ctrl = timings.get("graph_pagerank")
-    if _ctrl:
-        for name, sec in timings.items():
-            if name.startswith("stream_"):
-                streaming_normalized[name] = round(sec / _ctrl, 3)
-        if streaming.get("streaming_medallion_sec"):
-            streaming_normalized["streaming_medallion"] = round(
-                streaming["streaming_medallion_sec"] / _ctrl, 3
-            )
-    # r14 (VERDICT r13 next #1): the pagerank-normalized ratios above are
-    # kept for historical continuity but are NOT the gate — a compute
-    # control in the denominator of a floor-dominated lane breaks on a
-    # fast box (the r13 false-positive).  The judged field is
-    # streaming_floor_normalized: each stream lane divided by the
-    # same-run no-op availableNow drain (identical microbatch machinery,
-    # zero data work), floor over floor, box-speed-invariant.
+    # Stream rows are judged by ratio, never by absolutes (their cost is
+    # microbatch/checkpoint floor): streaming_floor_normalized divides
+    # each stream lane by the same-run no-op availableNow drain
+    # (identical microbatch machinery, zero data work), floor over
+    # floor, box-speed-invariant.  A compute control such as
+    # graph_pagerank in the denominator breaks on a fast box.
     streaming_floor_normalized: dict[str, float] = {}
     if stream_floor:
         for name, sec in timings.items():
@@ -458,18 +421,11 @@ def main() -> None:
         "metric": "headline_queries_total_wall",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
-        "r3_comparable_total": round(
-            sum(v for k, v in timings.items() if k in r3_set), 3
-        ),
-        "r4_comparable_total": round(
-            sum(v for k, v in timings.items() if k in r4_set), 3
-        ),
         "queries": timings,
         "queries_min": mins,
         "queries_cold": cold,
         **streaming,
         "stream_noop_drain_sec": stream_floor,
-        "streaming_normalized": streaming_normalized,
         "streaming_floor_normalized": streaming_floor_normalized,
         "sf": sf,
     }
@@ -498,7 +454,6 @@ def main() -> None:
         "metric": "bench_compact",
         "warm_total": summary["value"],
         "unit": "sec",
-        "r4_comparable_total": summary["r4_comparable_total"],
         "queries": {k: round(v, 3) for k, v in timings.items()},
         "streaming_floor_normalized": streaming_floor_normalized,
         "worst_rows": sorted(

@@ -146,248 +146,6 @@ def dissolve(
     return deduped.groupBy(*by).applyInPandas(fn, schema)
 
 
-def polygonize_auto(
-    cells: DataFrame,
-    group_cols: Sequence[str],
-    threshold_cells: int | None = None,
-    tile_size: int = 4096,
-    x0: float = 0.0,
-    y0: float = 0.0,
-    cellsize: float = 1.0,
-    nrows: int | None = None,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Size-dispatched polygonize — ``dissolve_auto``'s twin for T4
-    (SCALE.md rule 52): the same one-aggregation sizing job routes
-    groups above the MEASURED polygonize crossover to
-    ``polygonize_tiled``.  Below the threshold the returned plan is
-    byte-identical to ``polygonize``; above it, component ids switch to
-    the tiled kernel's deterministic min-cell assignment (the plain
-    kernel's ids are arrival-order-dependent anyway, so no consumer may
-    rely on them).
-
-    The default threshold is ``POLYGONIZE_TILED_THRESHOLD_CELLS`` —
-    polygonize's OWN measured crossover (r14,
-    ``scripts/polygonize_crossover_sweep.py``), not dissolve's: the
-    boundary walk plus per-component stitching makes the tiled twin's
-    constant factor cheaper relative to plain than dissolve's, so the
-    curves meet ~20x earlier (~100k cells/group vs dissolve's
-    extrapolated ~2M)."""
-    group_cols = list(group_cols)
-    if threshold_cells is None:
-        threshold_cells = POLYGONIZE_TILED_THRESHOLD_CELLS
-    max_n = (
-        cells.groupBy(*group_cols).count().agg(F.max("count")).first()[0]
-    )
-    if max_n is None or max_n <= threshold_cells:
-        return polygonize(
-            cells, group_cols, x0, y0, cellsize, nrows, num_partitions
-        )
-    return polygonize_tiled(
-        cells, group_cols, tile_size, x0, y0, cellsize, nrows
-    )
-
-
-def polygonize_tiled(
-    cells: DataFrame,
-    group_cols: Sequence[str],
-    tile_size: int = 4096,
-    x0: float = 0.0,
-    y0: float = 0.0,
-    cellsize: float = 1.0,
-    nrows: int | None = None,
-) -> DataFrame:
-    """Two-level polygonize with cross-tile component stitching
-    (VERDICT r12 next #5 — the same superlinear-second-decade shape
-    SCALE.md rule 49 measured for the plain dissolve applies to
-    ``polygonize``'s one-Python-task-per-group boundary walk).
-
-    Level 1 runs the numpy kernel per (group, tile) — task memory and
-    walk cost bounded by ``tile_size^2`` cells — and, for every
-    tile-local component, also emits the UNDIRECTED grid-edge keys of
-    its border cells that face a neighboring tile (O(perimeter) keys).
-    Level 2 stitches: an edge key seen from BOTH sides is a
-    4-connectivity bridge between two tile-local components, so a
-    per-group cogrouped union-find over (tile, local_comp) nodes —
-    thousands of nodes, not billions of cells — rebuilds the global
-    components and merges their per-tile polygon pieces.
-
-    Semantics vs ``polygonize``: identical component PARTITION of the
-    cells (same count, same per-component n_cells and area — the
-    equivalence pin in tests/test_geometry.py), geometry is the same
-    region as a MultiPolygon whose parts are split along tile lines,
-    and ``component_id`` is assigned deterministically by each
-    component's minimum (row, col) cell — unlike the plain kernel,
-    whose ids depend on the group's row arrival order.
-    """
-    group_cols = list(group_cols)
-    affine_cols = [
-        c for c in ("xll", "yll", "cellsize", "nrows") if c in cells.columns
-    ]
-    ts = int(tile_size)
-    tiled = cells.withColumn(
-        "_tile_r", F.floor(F.col("row") / ts).cast("long")
-    ).withColumn("_tile_c", F.floor(F.col("col") / ts).cast("long"))
-
-    l1_schema = T.StructType(
-        [cells.schema[c] for c in group_cols]
-        + [
-            T.StructField("_tile_r", T.LongType()),
-            T.StructField("_tile_c", T.LongType()),
-            T.StructField("_lcomp", T.LongType()),
-            T.StructField("geometry", T.BinaryType()),
-            T.StructField("n_cells", T.LongType()),
-            T.StructField("area", T.DoubleType()),
-            T.StructField("min_row", T.LongType()),
-            T.StructField("min_col", T.LongType()),
-            T.StructField("_border", T.ArrayType(T.StringType())),
-        ]
-    )
-
-    def l1(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        from ..functions.geometry import label_components
-
-        keys = {c: pdf[c].iloc[0] for c in group_cols}
-        tr, tc = int(pdf["_tile_r"].iloc[0]), int(pdf["_tile_c"].iloc[0])
-        gx0, gy0, gcs, gnr = _affine_of(pdf, (x0, y0, cellsize, nrows))
-        rows = pdf["row"].to_numpy(dtype=np.int64)
-        cols = pdf["col"].to_numpy(dtype=np.int64)
-        rows, cols = np.unique(
-            np.stack([rows, cols]), axis=1
-        )  # kernel requires unique cells; dedupe like dissolve's level 1
-        labels = label_components(rows, cols)
-        parts = polygonize_cells(rows, cols, gx0, gy0, gcs, gnr)
-        # per-component min cell (deterministic global id seed) and
-        # outward border edge keys (canonical undirected grid edges)
-        min_cell: dict[int, tuple[int, int]] = {}
-        border: dict[int, list[str]] = {}
-        for r, c, lab in zip(rows, cols, labels):
-            r, c, lab = int(r), int(c), int(lab)
-            if lab not in min_cell or (r, c) < min_cell[lab]:
-                min_cell[lab] = (r, c)
-            for dr, dc in ((0, 1), (1, 0), (0, -1), (-1, 0)):
-                nr, nc = r + dr, c + dc
-                if nr // ts != tr or nc // ts != tc:  # crosses a tile line
-                    lo, hi = min((r, c), (nr, nc)), max((r, c), (nr, nc))
-                    border.setdefault(lab, []).append(
-                        f"{lo[0]}:{lo[1]}|{hi[0]}:{hi[1]}"
-                    )
-        return pd.DataFrame(
-            [
-                {
-                    **keys,
-                    "_tile_r": tr,
-                    "_tile_c": tc,
-                    "_lcomp": comp,
-                    "geometry": wkb,
-                    "n_cells": n,
-                    "area": area,
-                    "min_row": min_cell[comp][0],
-                    "min_col": min_cell[comp][1],
-                    "_border": border.get(comp, []),
-                }
-                for comp, wkb, n, area in parts
-            ],
-            columns=l1_schema.fieldNames(),
-        )
-
-    pieces = tiled.groupBy(
-        *group_cols, "_tile_r", "_tile_c"
-    ).applyInPandas(l1, l1_schema)
-
-    # stitch edges: an undirected border edge key emitted by two
-    # different tiles bridges their local components.  Aggregation is
-    # constant-buffer per key (exactly 2 rows can share one grid edge).
-    links = pieces.select(
-        *group_cols,
-        F.concat_ws(
-            "@", F.col("_tile_r"), F.col("_tile_c"), F.col("_lcomp")
-        ).alias("node"),
-        F.explode("_border").alias("ek"),
-    )
-    edges = (
-        links.groupBy(*group_cols, "ek")
-        .agg(
-            F.min("node").alias("node_a"),
-            F.max("node").alias("node_b"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .where(F.col("n") == 2)
-        .select(*group_cols, "node_a", "node_b")
-        .distinct()
-    )
-
-    out_schema = T.StructType(
-        [cells.schema[c] for c in group_cols]
-        + [
-            T.StructField("component_id", T.LongType()),
-            T.StructField("geometry", T.BinaryType()),
-            T.StructField("n_cells", T.LongType()),
-            T.StructField("area", T.DoubleType()),
-        ]
-    )
-
-    def stitch(key, comp_pdf: pd.DataFrame, edge_pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..functions.wkb import decode, encode_multipolygon
-
-        keys = dict(zip(group_cols, key))
-        nodes = [
-            f"{tr}@{tc}@{lc}"
-            for tr, tc, lc in zip(
-                comp_pdf["_tile_r"], comp_pdf["_tile_c"], comp_pdf["_lcomp"]
-            )
-        ]
-        parent = {n: n for n in nodes}
-
-        def find(n: str) -> str:
-            while parent[n] != n:
-                parent[n] = parent[parent[n]]
-                n = parent[n]
-            return n
-
-        for a, b in zip(edge_pdf["node_a"], edge_pdf["node_b"]):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        groups: dict[str, list[int]] = {}
-        for i, n in enumerate(nodes):
-            groups.setdefault(find(n), []).append(i)
-        merged = []
-        for idxs in groups.values():
-            polys: list = []
-            for i in idxs:
-                _, ps = decode(bytes(comp_pdf["geometry"].iloc[i]))
-                polys.extend(ps)
-            merged.append(
-                {
-                    **keys,
-                    "geometry": encode_multipolygon(polys),
-                    "n_cells": int(comp_pdf["n_cells"].iloc[idxs].sum()),
-                    "area": float(comp_pdf["area"].iloc[idxs].sum()),
-                    "_min": min(
-                        (
-                            int(comp_pdf["min_row"].iloc[i]),
-                            int(comp_pdf["min_col"].iloc[i]),
-                        )
-                        for i in idxs
-                    ),
-                }
-            )
-        merged.sort(key=lambda d: d["_min"])
-        for cid, d in enumerate(merged):
-            d["component_id"] = cid
-            del d["_min"]
-        return pd.DataFrame(merged, columns=out_schema.fieldNames())
-
-    return (
-        pieces.groupBy(*group_cols)
-        .cogroup(edges.groupBy(*group_cols))
-        .applyInPandas(stitch, out_schema)
-    )
-
-
 #: Measured crossover where the tiled dissolve starts beating the plain
 #: one-task-per-group kernel (SCALE.md rule 49: plain's second decade is
 #: superlinear e=1.19 — kernel + Arrow transfer scale with the whole
@@ -397,20 +155,6 @@ def polygonize_tiled(
 #: extrapolation error: the cost of routing early is a constant-factor
 #: level-2 merge; the cost of routing late is superlinear.
 DISSOLVE_TILED_THRESHOLD_CELLS = 2_000_000
-
-#: MEASURED crossover for polygonize (r14, VERDICT r13 next #5 —
-#: previously this dispatch borrowed dissolve's extrapolated ~2M).
-#: `scripts/polygonize_crossover_sweep.py`, gapped-lattice replication
-#: through the SECOND decade with component-count identity asserted at
-#: both scales: second-decade exponents plain e=1.217 (one Python task
-#: per group — kernel + Arrow transfer scale with the whole group) vs
-#: tiled e=1.019 (per-tile work constant, only tile count grows), and
-#: the curves MEET at the 100x arm itself — plain 51.44 s vs tiled
-#: 51.63 s at 102,400 cells/group (within 0.4%), power-law
-#: intersection at ~104k.  Threshold set AT the measured crossover:
-#: routing early costs the constant-factor level-2 stitch (1.6x at
-#: 10k cells/group), routing late costs the superlinear plain curve.
-POLYGONIZE_TILED_THRESHOLD_CELLS = 100_000
 
 
 def dissolve_auto(

@@ -1,7 +1,5 @@
 """Scale-path similarity operators over embedding columns.
 
-Two variants promised by plans/vectors.py and functions/vectors.py:
-
 - ``near_dup_lsh``: random-hyperplane LSH (SimHash for vectors).  The
   brute-force all-pairs cosine (plans/vectors.py emb_near_dup) is O(n^2)
   comparisons — at 100 TB that plan is unrunnable.  Here each vector gets a
@@ -12,10 +10,8 @@ Two variants promised by plans/vectors.py and functions/vectors.py:
   near-duplicates collide in some band with high probability while the
   expected candidate count stays near-linear.  Precision is exact (re-score
   filter); recall is tunable via (n_planes, bands).
-- ``cosine_topk_pandas``: the high-dimension variant — one numpy/BLAS
-  matrix multiply per Arrow batch against the broadcast query matrix,
-  instead of a per-element fold expression.  Above ~4k dims the JVM
-  fold loses to BLAS even counting the Arrow transfer.
+- ``norms_map_in_arrow``: L2 norms through ``mapInArrow``, one vectorized
+  numpy call per Arrow batch.
 
 The hyperplanes are seeded, generated once on the driver, and inlined as
 literal arrays — every executor evaluates the same signature with zero
@@ -26,9 +22,8 @@ from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.vectors import as_double, cosine, dot
 from ..functions.materialize import materialize_once
@@ -165,68 +160,6 @@ def near_dup_lsh(
         )
         .where(F.col("cos_sim") >= threshold)
         .orderBy("vec_a", "vec_b")
-    )
-
-
-def cosine_topk_pandas(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k via numpy/BLAS inside mapInPandas: per Arrow batch, ONE
-    (batch x dim) @ (dim x n_queries) matmul scores every candidate against
-    every query — the high-dimension replacement for the fold-expression
-    cosine (same results; see tests/test_similarity.py for the equivalence
-    check against plans/vectors.cosine_topk)."""
-    queries = (
-        emb.where(F.col(id_col).isin(query_ids))
-        .select(id_col, vec_col)
-        .collect()
-    )
-    q_ids = np.array([r[0] for r in queries], dtype=np.int64)
-    q_mat = np.array([r[1] for r in queries], dtype=np.float64)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("cand_id", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            c_mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            sims = (c_mat @ q_mat.T) / (
-                np.linalg.norm(c_mat, axis=1)[:, None] * q_norm[None, :]
-            )
-            n_c, n_q = sims.shape
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids[None, :], n_c, 0).ravel(),
-                    "cand_id": np.repeat(c_ids[:, None], n_q, 1).ravel(),
-                    "cos_sim": np.round(sims.ravel(), 6),
-                }
-            )
-
-    scored = (
-        emb.select(id_col, vec_col)
-        .mapInPandas(score, out_schema)
-        .where(F.col("cand_id") != F.col("query_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
-        .orderBy("query_id", "rnk")
     )
 
 

@@ -1734,7 +1734,7 @@ def ev_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.88x — the checkpoint materialization costs ~12% locally where
     fact scans are nearly free, the price of the 3x scan cut; jobs
     unchanged at 7.  The r15 bench-row inflation itself adjudicated as
-    box, not plan (scripts/r16_stall_rows_ab.py: min 1.05x its r10 row
+    box, not plan (0ba482d:scripts/r16_stall_rows_ab.py: min 1.05x its r10 row
     at unchanged jobs).
     """
     events = load_table(spark, sf_dir, "events")

@@ -818,139 +818,6 @@ def curation_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def curation_token_budget_histogram(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Sort-free scale path of ``curation_token_budget`` — SAME kept set,
-    SAME output frame, no per-language full sort of the fact table.
-
-    Not registered (it is an execution-strategy twin, not a new operator
-    — the ``dissolve_tiled`` discipline): equivalence to the window form
-    is pytest-gated at two fixture scales in tests/test_quality_signals.py.
-
-    The window form sorts every document within its language to take a
-    running token sum.  At 100 TB that per-stratum sort is the cost.  But
-    the cut only needs the ORDER STATISTIC of the quality score: build a
-    per-(lang, score) token histogram (rows = distinct scores, not docs),
-    run the budget arithmetic on the histogram, and classify each bucket
-    keep-all / boundary / drop.  Because the doc-level running sum is
-    monotone, every doc in a bucket whose through-cumulative fits the
-    budget is kept, every doc in a bucket whose before-cumulative exceeds
-    it is dropped, and only the SINGLE crossing bucket per language needs
-    the doc-ordered prefix walk — a window over a handful of rows, not
-    the corpus.
-
-    Plan shape: histogram groupBy (map-side combined to distinct scores),
-    two tiny windows over the histogram, a BROADCAST join of the bucket
-    decisions back to the facts (zero fact shuffle), the boundary-only
-    window, and the final groupBy(lang) whose exchange carries partial
-    aggregates only.  Nothing sorts the fact table.
-
-    Known tradeoff (visible in the physical plan): without
-    materialization the lazy DAG tokenizes the fact table once per
-    branch (histogram pass + the two union branches).  At 100 TB the
-    move is to materialize the (doc_id, lang, score, ntok) projection
-    once — four fixed-width columns, ~32 B/row, well under 0.1% of
-    corpus bytes — and run both passes over it; the cut logic here is
-    unchanged.  The window form, by contrast, cannot avoid sorting the
-    corpus no matter what is materialized.
-    """
-    from .text import _tokens
-
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", "lang", "n_chars", F.size(_tokens()).cast("long").alias("ntok")
-    )
-    return _token_budget_histogram_cut(toks)
-
-
-def curation_token_budget_histogram_materialized(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The histogram twin with its documented 100 TB move applied: the
-    narrow (doc_id, lang, n_chars, ntok) projection is MATERIALIZED once
-    (localCheckpoint — in production, a persisted table) so the three
-    lazy branches stop re-tokenizing the fact table.  Unregistered, like
-    the twin; exists so scripts/curation_crossover.py can measure the
-    materialization claim instead of asserting it."""
-    from .text import _tokens
-
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", "lang", "n_chars", F.size(_tokens()).cast("long").alias("ntok")
-    ).localCheckpoint(eager=True)
-    return _token_budget_histogram_cut(toks)
-
-
-def _token_budget_histogram_cut(toks: DataFrame) -> DataFrame:
-    """Histogram budget cut over a (doc_id, lang, n_chars, ntok) frame —
-    the shared body of the two histogram forms above."""
-    hist = toks.groupBy("lang", "n_chars").agg(
-        F.sum("ntok").alias("bucket_tok")
-    )
-    order = Window.partitionBy("lang").orderBy(F.col("n_chars").desc())
-    run = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    everything = Window.partitionBy("lang")
-    decided = (
-        hist.select(
-            "lang",
-            "n_chars",
-            "bucket_tok",
-            F.sum("bucket_tok").over(run).alias("cum_through"),
-            F.floor(F.sum("bucket_tok").over(everything) * 0.4).alias(
-                "budget_tokens"
-            ),
-        )
-        .withColumn("cum_before", F.col("cum_through") - F.col("bucket_tok"))
-        .select(
-            "lang",
-            "n_chars",
-            "budget_tokens",
-            "cum_before",
-            (F.col("cum_through") <= F.col("budget_tokens")).alias("keep_all"),
-            (
-                (F.col("cum_before") <= F.col("budget_tokens"))
-                & (F.col("cum_through") > F.col("budget_tokens"))
-            ).alias("boundary"),
-        )
-    )
-
-    joined = toks.join(F.broadcast(decided), ["lang", "n_chars"])
-    non_boundary = joined.where(~F.col("boundary")).select(
-        "doc_id", "lang", "ntok", "budget_tokens",
-        F.col("keep_all").alias("kept"),
-    )
-    prefix = (
-        Window.partitionBy("lang", "n_chars")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    boundary = joined.where("boundary").select(
-        "doc_id", "lang", "ntok", "budget_tokens",
-        (
-            (F.col("cum_before") + F.sum("ntok").over(prefix))
-            <= F.col("budget_tokens")
-        ).alias("kept"),
-    )
-    flagged = non_boundary.unionByName(boundary)
-    kept = F.col("kept")
-    return (
-        flagged.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_total"),
-            F.sum(kept.cast("long")).alias("n_kept"),
-            F.max("budget_tokens").alias("budget_tokens"),
-            F.sum(F.when(kept, F.col("ntok")).otherwise(F.lit(0))).alias(
-                "tokens_used"
-            ),
-            F.sum(F.when(kept, F.col("doc_id")).otherwise(F.lit(0))).alias(
-                "id_checksum"
-            ),
-        )
-        .orderBy("lang")
-    )
-
-
 CURATION_TOKEN_BUDGET_ORACLE = """
 WITH toks AS (
     SELECT doc_id, lang, n_chars,

@@ -314,7 +314,7 @@ def _mmr_pair_sims(cands: DataFrame) -> DataFrame:
 
     r19 re-measurement (VERDICT r18 #6, driver-cold protocol: fresh
     process per cell, cold + 4 warm noop passes, 3 alternations —
-    scripts/r19_cold_ab.py): broadcast 2.20/2.39/2.42 s warm median vs
+    0ba482d:scripts/r19_cold_ab.py): broadcast 2.20/2.39/2.42 s warm median vs
     un-hinted SMJ 2.18/2.46/2.59 s — a wash locally (the lane is
     head-dominated), KEPT for the plan shape per guide §3.1: never
     shuffle-sort a cap-bounded frame.  The r18 driver's 0.85-0.90x
@@ -392,9 +392,8 @@ def retrieval_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold, see ``_mmr_pair_sims``), then ONE cogrouped Arrow kernel runs
     the K-step greedy per query — iterative data-dependent selection is
     exactly the non-relational shape the kernel escape hatch exists
-    for.  The JVM round-loop twin (``retrieval_mmr_diversify_rounds``,
-    unregistered, equivalence-pinned like ``dissolve_tiled``) expresses
-    the same trajectory as K−1 joined rounds; it is plan-pure but pays
+    for.  A JVM round-loop twin (deleted; in git at 0ba482d) expressed
+    the same trajectory as K−1 joined rounds; it was plan-pure but paid
     ~3 candidate-frame shuffles + a checkpoint per round — measured
     1.7× slower at sf0.1 (2.53 s vs 4.21 s medians, 5 interleaved
     alternations, equivalence asserted first).  Barrier count, not
@@ -603,18 +602,17 @@ def retrieval_mmr_diversify_ivf(
 
 
 def retrieval_mmr_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Size-dispatched MMR (VERDICT r14 #3 — the ``dissolve_auto``/
-    ``polygonize_auto`` pattern, third instance): one aggregation-only
-    sizing job counts the query set; at or below ``_MMR_MAX_QUERIES``
-    the EXACT head runs (byte-identical plan and output to
-    ``retrieval_mmr_diversify`` — exactness is worth its constant
-    factor while the broadcast bound holds), above it the exact head is
-    structurally impossible (its broadcast is hard-capped), so the lane
-    routes to the IVF-probed head, whose query side streams and whose
-    only broadcast is nlist centroids.
+    """Size-dispatched MMR (VERDICT r14 #3 — the ``dissolve_auto``
+    pattern): one aggregation-only sizing job counts the query set; at
+    or below ``_MMR_MAX_QUERIES`` the EXACT head runs (byte-identical
+    plan and output to ``retrieval_mmr_diversify`` — exactness is worth
+    its constant factor while the broadcast bound holds), above it the
+    exact head is structurally impossible (its broadcast is hard-capped),
+    so the lane routes to the IVF-probed head, whose query side streams
+    and whose only broadcast is nlist centroids.
 
     The cap-dispatch is CONSERVATIVE on cost, measured
-    (scripts/mmr_head_crossover_sweep.py, sf0.1, amortized quantizer,
+    (0ba482d:scripts/mmr_head_crossover_sweep.py, sf0.1, amortized quantizer,
     interleaved cells): the IVF head is already cheaper than the exact
     head from ~20 queries on (0.89x at 20, 0.53x at 100, 0.46x at 334
     on the 2000-vector fixture corpus), so routing to IVF at the cap
@@ -633,70 +631,6 @@ def retrieval_mmr_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb, cent=_ivf_centroids_cached(spark, sf_dir, emb)
         )
     )
-
-
-def retrieval_mmr_diversify_rounds(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The kernel-free twin: the same greedy trajectory as K−1 rounds of
-    bounded join + per-query argmax window, chained lazily (one action;
-    each round's union lazily localCheckpoint-ed so the plan stays
-    linear in K, the ``hier_rollup`` discipline).  Unregistered;
-    tests/test_retrieval_mmr.py pins it row-identical to the registered
-    kernel lane."""
-    cands = _mmr_candidates(
-        load_table(spark, sf_dir, "embeddings")
-    ).transform(materialize_once)
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("rel_micro").desc(), "vec_id"
-    )
-    pair_sims = _mmr_pair_sims(cands).transform(materialize_once)
-    slim = cands.select("query_id", "vec_id", "rel_micro")
-
-    selected = (
-        slim.withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") == 1)
-        .select(
-            "query_id",
-            F.lit(1).cast("long").alias("rank"),
-            "vec_id",
-            "rel_micro",
-        )
-    )
-    for r in range(2, _MMR_K + 1):
-        max_sim = (
-            pair_sims.join(
-                selected.select(
-                    "query_id", F.col("vec_id").alias("b_id")
-                ),
-                ["query_id", "b_id"],
-            )
-            .groupBy(
-                F.col("query_id").alias("ms_query_id"), F.col("a_id")
-            )
-            .agg(F.max("sim_micro").alias("max_sim"))
-        )
-        wpick = Window.partitionBy("query_id").orderBy(
-            (F.col("rel_micro") - F.col("max_sim")).desc(), "vec_id"
-        )
-        pick = (
-            slim.join(selected, ["query_id", "vec_id"], "left_anti")
-            .join(
-                max_sim,
-                (F.col("query_id") == F.col("ms_query_id"))
-                & (F.col("vec_id") == F.col("a_id")),
-            )
-            .withColumn("rn", F.row_number().over(wpick))
-            .where(F.col("rn") == 1)
-            .select(
-                "query_id",
-                F.lit(r).cast("long").alias("rank"),
-                "vec_id",
-                "rel_micro",
-            )
-        )
-        selected = selected.unionByName(pick).transform(materialize_once)
-    return selected.orderBy("query_id", "rank")
 
 
 def _mmr_oracle(head_ctes: str) -> str:

@@ -290,7 +290,7 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # null-shipdate rows to one side explicitly.  In production the
     # base side is the STORED MV, not a rescan — there the two-frame
     # partials()+union shape (exercised by the delta side) is the real
-    # plan.  r19 cold-protocol A/B (scripts/r19_cold_ab.py, fresh
+    # plan.  r19 cold-protocol A/B (0ba482d:scripts/r19_cold_ab.py, fresh
     # process per cell, 3 alternations): flag-split 0.79-0.91 s warm
     # median vs 0.74-0.98 s for the two-scan form — >=flat, kept
     # (VERDICT r18 #6; the driver's 0.85 reading was the contaminated

@@ -790,7 +790,7 @@ def persist_corpus_signatures(
     byte ratio is 50-500x and the removed re-scan dominates the naive
     lane; at the fixture's ~1 KB docs the measured ratio is only 2.1x
     and the warm wall-time win is within noise (1.02x, interleaved A/B
-    `scripts/incremental_manifest_ab.py`) — the fixture validates the
+    `0ba482d:scripts/incremental_manifest_ab.py`) — the fixture validates the
     PLUMBING (zero corpus-text scans, plan-pinned), not the speedup.
     Returns the committed manifest version.  ``txn`` makes streaming
     ingest idempotent (replayed commits no-op, the Delta txn contract).

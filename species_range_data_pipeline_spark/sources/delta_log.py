@@ -33,7 +33,7 @@ loudly, never returns wrong rows:
   COMPRESSED bitmaps, applied only to the DV'd files' scan (clean
   files scan separately, untaxed); an all-JVM anti-join variant was
   built, measured slower at every rung, and deleted
-  (scripts/dv_path_crossover_sweep.py).
+  (0ba482d:scripts/dv_path_crossover_sweep.py).
   ``minReaderVersion=3`` is accepted iff ``readerFeatures`` is within
   ``{deletionVectors, columnMapping}``; anything else (timestampNtz,
   v2 checkpoints) is refused.  COLUMN MAPPING (r18, name AND id modes)
@@ -660,7 +660,7 @@ def _apply_deletion_vectors(
     UDF filters on ``_metadata.row_index``, decoding each file's
     bitmap once per executor on demand.  A driver-exploded
     (path, pos) broadcast anti-join was built and measured first
-    (scripts/dv_path_crossover_sweep.py): it LOST at every rung — 2.1x
+    (0ba482d:scripts/dv_path_crossover_sweep.py): it LOST at every rung — 2.1x
     at 400 positions over 8M rows (its best case on paper: the
     driver-explode + row-broadcast fixed cost dominates) through 10x
     at 800k positions — so the all-JVM variant was deleted rather than

@@ -122,7 +122,9 @@ def _file_stats(fpath: str) -> dict[str, list]:
     A column appears iff EVERY row group has usable min/max for it — a
     single stats-less row group could hold anything, so the column is
     dropped for the whole file (skipping must never be wrong, only
-    incomplete)."""
+    incomplete).  A column whose min/max pyarrow cannot decode (the
+    integer-backed DECIMALs) counts as stats-less the same way."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(fpath).metadata
@@ -136,8 +138,12 @@ def _file_stats(fpath: str) -> dict[str, list]:
             if name in poisoned or "." in name:  # nested paths: skip
                 continue
             s = col.statistics
-            mn = _jsonable_stat(s.min) if s is not None and s.has_min_max else None
-            mx = _jsonable_stat(s.max) if s is not None and s.has_min_max else None
+            mn = mx = None
+            if s is not None and s.has_min_max:
+                try:
+                    mn, mx = _jsonable_stat(s.min), _jsonable_stat(s.max)
+                except pa.ArrowNotImplementedError:
+                    pass
             if mn is None or mx is None:
                 poisoned.add(name)
                 acc.pop(name, None)

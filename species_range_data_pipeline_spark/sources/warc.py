@@ -344,7 +344,7 @@ def _estimated_input_bytes(df: DataFrame) -> int | None:
     sizing — parquet-compressed input vs gzip WARC output differ by a
     modest constant, which only shifts shard sizes, never correctness.
 
-    Caveat (measured, scripts/container_read_sweep.py r16): a frame
+    Caveat (measured, 0ba482d:scripts/container_read_sweep.py r16): a frame
     whose row count was BLOWN UP between the scan and the write
     (explode, crossJoin replication) still reports the small source
     file's bytes — the estimate cannot see generated growth.  Callers

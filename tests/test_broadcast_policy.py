@@ -89,8 +89,6 @@ ALLOWED: dict[str, dict[str, str]] = {
     "plans/quality.py": {
         "fences": "per-event-type fences; type domain fixed",
         "k": "global scalar (1 row)",
-        "decided": "per-(lang, n_chars) boundary bits; a length "
-                   "histogram, not a doc table",
     },
     "plans/tpch_extra.py": {
         "region": "fixed dim (5 rows)",

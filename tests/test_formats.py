@@ -522,6 +522,44 @@ def test_manifest_zone_map_absent_stats_never_prunes(spark, tmp_path):
     )
 
 
+def test_manifest_decimal_columns_write_without_zone_maps(spark, tmp_path):
+    """pyarrow cannot extract min/max for integer-backed DECIMAL columns
+    (INT32 for DECIMAL(1,1), INT64 for DECIMAL(10,2)).  Such a column is
+    treated as stats-less: the write succeeds, a filter on it keeps
+    every file and still returns the right rows, and the other columns
+    keep their zone maps."""
+    from decimal import Decimal
+
+    from species_range_data_pipeline_spark.sources.manifest_table import (
+        manifest_scan_files,
+        read_manifest_table,
+        write_manifest_table,
+    )
+
+    path = str(tmp_path / "tbl")
+    write_manifest_table(
+        spark.range(3).coalesce(1).selectExpr(
+            "id", "CAST(id AS DECIMAL(10,2)) AS amt", "0.5 AS score"
+        ),
+        path,
+    )
+    got = sorted(
+        tuple(r) for r in read_manifest_table(spark, path).collect()
+    )
+    assert got == [
+        (i, Decimal(f"{i}.00"), Decimal("0.5")) for i in range(3)
+    ]
+    assert (
+        read_manifest_table(spark, path)
+        .schema["score"].dataType.simpleString() == "decimal(1,1)"
+    )
+    hit = read_manifest_table(spark, path, filters=[("amt", ">", 1)])
+    assert [r.id for r in hit.collect()] == [2]
+    assert len(manifest_scan_files(path, filters=[("amt", ">", 100)])) == 1
+    # the id column keeps its zone map: an out-of-range filter prunes
+    assert manifest_scan_files(path, filters=[("id", ">", 10)]) == []
+
+
 def test_manifest_optimize_zorder_makes_skipping_effective(spark, tmp_path):
     """OPTIMIZE ZORDER: commits whose files each span the FULL value range
     prune nothing; after rewriting into z-ordered files, single-column

@@ -572,131 +572,3 @@ def test_dissolve_auto_dispatches_on_group_size(spark):
         cells.union(cells), ["species"], threshold_cells=9, tile_size=2
     )
     assert "_tile_r" in plan(auto_dup)
-
-
-def test_polygonize_tiled_matches_plain_partition(spark):
-    """Tiled polygonize (VERDICT r12 #5): the stitched components must be
-    the SAME partition of the cells as the single-task kernel — same
-    component count, same per-component (n_cells, area) multiset per
-    group — with geometry covering the same region (shoelace area of the
-    emitted MultiPolygon equals the reported area) and deterministic
-    min-cell component ids."""
-    import pandas as pd
-
-    from species_range_data_pipeline_spark.functions.wkb import wkb_area
-    from species_range_data_pipeline_spark.operators.polygonize import (
-        polygonize,
-        polygonize_tiled,
-    )
-
-    # hand lattice: one U-shaped component spanning all four 2x2 tiles,
-    # a hole-bearing block, and a singleton — plus a second group
-    pdf = pd.DataFrame(
-        {
-            "species": ["a"] * 8 + ["b"] * 9,
-            "row": [0, 1, 2, 3, 3, 3, 2, 0, 0, 0, 0, 1, 1, 2, 2, 2, 3],
-            "col": [0, 0, 0, 0, 1, 2, 2, 3, 0, 1, 2, 0, 2, 0, 1, 2, 3],
-        }
-    )
-    cells = spark.createDataFrame(pdf)
-    for tile in (2, 3):
-        plain = polygonize(cells, ["species"]).collect()
-        tiled = polygonize_tiled(cells, ["species"], tile_size=tile).collect()
-        for grp in ("a", "b"):
-            p = sorted(
-                (r.n_cells, round(r.area, 9)) for r in plain if r.species == grp
-            )
-            t = sorted(
-                (r.n_cells, round(r.area, 9)) for r in tiled if r.species == grp
-            )
-            assert t == p and p, (grp, tile)
-        # region check + deterministic dense ids
-        for r in tiled:
-            assert abs(wkb_area(bytes(r.geometry)) - r.area) < 1e-9
-        ids = sorted(r.component_id for r in tiled if r.species == "b")
-        assert ids == list(range(len(ids)))
-
-    # group 'b' interior hole must survive tiling: 3x3 ring of 8 cells
-    # (center missing) + singleton -> area 8 for the ring component
-    tiled_b = {
-        r.n_cells: r.area
-        for r in polygonize_tiled(cells, ["species"], tile_size=2).collect()
-        if r.species == "b"
-    }
-    assert tiled_b[8] == 8.0 and tiled_b[1] == 1.0
-
-
-def test_polygonize_tiled_matches_on_lineitem_lattice(spark):
-    """Fixture-scale equivalence on the registered lanes' cell stream:
-    per-(species, threshold) component-size multisets and rounded total
-    areas identical between the plain and tiled kernels."""
-    from species_range_data_pipeline_spark.operators.polygonize import (
-        polygonize,
-        polygonize_tiled,
-    )
-    from species_range_data_pipeline_spark.plans.geo import (
-        _cells_from_lineitem,
-    )
-
-    from .conftest import SF_CORRECT
-
-    cells = _cells_from_lineitem(spark, SF_CORRECT).distinct()
-    keyf = lambda r: (r.species, r.threshold_s)  # noqa: E731
-    plain: dict = {}
-    for r in polygonize(cells, ["species", "threshold_s"]).collect():
-        plain.setdefault(keyf(r), []).append((r.n_cells, round(r.area, 6)))
-    tiled: dict = {}
-    for r in polygonize_tiled(
-        cells, ["species", "threshold_s"], tile_size=8
-    ).collect():
-        tiled.setdefault(keyf(r), []).append((r.n_cells, round(r.area, 6)))
-    assert plain.keys() == tiled.keys() and plain
-    for k in plain:
-        assert sorted(plain[k]) == sorted(tiled[k]), k
-
-
-def test_polygonize_auto_dispatches_on_group_size(spark):
-    """polygonize_auto mirrors dissolve_auto (SCALE.md rule 52): plan
-    byte-identical to the plain kernel below the threshold, the tiled
-    stitching kernel above it, same component partition either way."""
-    import pandas as pd
-
-    from species_range_data_pipeline_spark.operators.polygonize import (
-        polygonize,
-        polygonize_auto,
-        polygonize_tiled,
-    )
-
-    pdf = pd.DataFrame(
-        {
-            "species": ["a"] * 6 + ["b"] * 2,
-            "row": [0, 0, 0, 1, 1, 1, 7, 7],
-            "col": [0, 1, 2, 0, 1, 2, 7, 8],
-        }
-    )
-    cells = spark.createDataFrame(pdf)
-
-    def plan(df):
-        import re
-
-        return re.sub(
-            r"#\d+", "#", df._jdf.queryExecution().optimizedPlan().toString()
-        )
-
-    auto_small = polygonize_auto(cells, ["species"], threshold_cells=100)
-    assert plan(auto_small) == plan(polygonize(cells, ["species"]))
-
-    auto_big = polygonize_auto(
-        cells, ["species"], threshold_cells=4, tile_size=2
-    )
-    assert plan(auto_big) == plan(
-        polygonize_tiled(cells, ["species"], tile_size=2)
-    )
-    got = sorted(
-        (r.species, r.n_cells, r.area) for r in auto_big.collect()
-    )
-    ref = sorted(
-        (r.species, r.n_cells, r.area)
-        for r in polygonize(cells, ["species"]).collect()
-    )
-    assert got == ref

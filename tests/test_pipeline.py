@@ -11,6 +11,7 @@ import pytest
 
 from species_range_data_pipeline_spark.pipeline.raster import parse_ascii_grid
 from species_range_data_pipeline_spark.pipeline.species import (
+    load_cells_from_dir,
     load_cells_from_zips,
     run_pipeline,
 )
@@ -295,6 +296,63 @@ def test_full_artifact_cycle_mixed_raster_formats(spark, tmp_path):
         assert rt.attrs["threshold"] == orig.threshold
         assert rt.attrs["scenario"] == orig.scenario
         assert decode(bytes(rt.geometry))[1] == decode(bytes(orig.geometry))[1]
+
+
+def test_load_cells_from_dir_matches_zip_extract(spark, tmp_path):
+    """Pre-landed members (``load_cells_from_dir``) decode to the same
+    cells, the same error rows and the same speciesdata rows as the
+    same members zipped (``load_cells_from_zips``).  The two paths name
+    a member differently (a full path vs the member name), so rows are
+    matched by basename."""
+    import os
+
+    from species_range_data_pipeline_spark.pipeline.geotiff import encode_geotiff
+
+    header = {
+        "ncols": NCOLS, "nrows": NROWS, "xllcorner": XLL,
+        "yllcorner": YLL, "cellsize": CS, "nodata_value": -9999.0,
+    }
+    g = _grid(2)
+    tif = encode_geotiff(
+        header,
+        [(r, c, float(g[r, c])) for r in range(NROWS) for c in range(NCOLS)
+         if g[r, c] != -9999.0],
+        dtype="f8",
+    )
+    members = {
+        "abies-balsamea__25_current.asc": _asc_bytes(_grid(1)),
+        "abies-balsamea__25_gfdl_rcp45_y2080.tif": tif,
+        "acer-rubrum__25_current.asc": _asc_bytes(_grid(3)),
+        "acer-rubrum__25_gfdl_rcp85_y2050.asc": b"ncols 8\nnot a grid",
+    }
+    landed = tmp_path / "landed"
+    landed.mkdir()
+    zips = tmp_path / "zips"
+    zips.mkdir()
+    with zipfile.ZipFile(zips / "all.zip", "w") as zf:
+        for name, data in members.items():
+            (landed / name).write_bytes(data)
+            zf.writestr(name, data)
+
+    def collected(load, path):
+        cells, errors = load(spark, path)
+        base = lambda p: os.path.basename(p)  # noqa: E731
+        got_cells = sorted(
+            (base(r.file), *tuple(r)[1:]) for r in cells.collect()
+        )
+        got_errors = sorted((base(r.item), r.error) for r in errors.collect())
+        rows = sorted(tuple(r) for r in run_pipeline(cells).collect())
+        return got_cells, got_errors, rows
+
+    from_dir = collected(load_cells_from_dir, str(landed))
+    from_zip = collected(load_cells_from_zips, str(zips))
+    assert from_dir == from_zip
+    cells, errors, rows = from_dir
+    assert {c[0] for c in cells} == set(members) - {
+        "acer-rubrum__25_gfdl_rcp85_y2050.asc"
+    }
+    assert [e[0] for e in errors] == ["acer-rubrum__25_gfdl_rcp85_y2050.asc"]
+    assert len(rows) == 9
 
 
 def test_assign_crs_metadata_and_error_channel(spark, zip_dir):

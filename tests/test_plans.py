@@ -531,30 +531,6 @@ def test_curation_queries_single_fact_exchange(spark):
         assert "Join" not in plan, plan
 
 
-def test_curation_histogram_twin_never_sorts_facts(spark):
-    """The sort-free twin's contract is structural: bucket decisions
-    BROADCAST back onto the facts (no fact-side shuffle join), and the
-    only Sorts ahead of windows key on (lang[, n_chars]) partitions that
-    are histogram- or boundary-sized, never a corpus-wide order.  Guard
-    the broadcast and the absence of quadratic/row-Python operators."""
-    import contextlib
-    import io
-
-    from species_range_data_pipeline_spark.plans.quality import (
-        curation_token_budget_histogram,
-    )
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        curation_token_budget_histogram(spark, SF_CORRECT).explain("formatted")
-    plan = buf.getvalue()
-    # formatted explain prints each node in the tree AND a detail
-    # section; count the tree form only
-    assert plan.count("BroadcastHashJoin Inner") == 2, plan
-    assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan, plan
-    assert "BatchEvalPython" not in plan, plan
-
-
 def test_ensure_parallel_no_rdd_conversion(spark, monkeypatch):
     """VERDICT r9 next #7: the parallelism guard must size itself from
     file stats, never from ``df.rdd.getNumPartitions()`` (a full

@@ -12,7 +12,7 @@ from species_range_data_pipeline_spark.plans.quality import (
     text_compression_ratio,
 )
 
-from .conftest import SF_CORRECT, SF_SMOKE
+from .conftest import SF_CORRECT
 
 
 def test_compression_ratio_matches_direct_zlib(spark):
@@ -60,46 +60,19 @@ def test_funnel_pass_equals_shared_predicate(spark):
     assert rows.get("pass", 0) == docs.where(quality_pass_condition()).count()
 
 
-@pytest.mark.parametrize("sf_dir", [SF_SMOKE, SF_CORRECT])
-def test_token_budget_histogram_twin_is_exact(spark, sf_dir):
-    """The sort-free histogram cut must reproduce the window form's kept
-    set EXACTLY (row-for-row, including the id-sum checksum that pins
-    membership, not just totals) — the `dissolve_tiled` equivalence
-    discipline for execution-strategy twins."""
-    from species_range_data_pipeline_spark.plans.quality import (
-        curation_token_budget,
-        curation_token_budget_histogram,
-        curation_token_budget_histogram_materialized,
-    )
-
-    ref = sorted(tuple(r) for r in curation_token_budget(spark, sf_dir).collect())
-    twin = sorted(
-        tuple(r) for r in curation_token_budget_histogram(spark, sf_dir).collect()
-    )
-    assert twin == ref
-    mat = sorted(
-        tuple(r)
-        for r in curation_token_budget_histogram_materialized(
-            spark, sf_dir
-        ).collect()
-    )
-    assert mat == ref
-
-
-def test_token_budget_histogram_boundary_bucket_is_split(spark):
+def test_token_budget_cut_splits_a_tied_score_bucket(spark):
     """A synthetic corpus whose budget lands MID-bucket: ties at the
     crossing score must be cut by doc_id prefix order, not whole-bucket."""
     from species_range_data_pipeline_spark.plans.quality import (
         curation_token_budget,
-        curation_token_budget_histogram,
     )
     import tempfile
 
     # one language, scores 30/20/20/20/10 with token counts 5/3/3/3/12
     # (n_chars is the quality score; the token count is independent).
-    # Total 26 tokens -> budget floor(0.4*26)=10: doc1 (cum 5) fully
-    # kept, the three-way score-20 tie crosses the budget at doc3
-    # (cum 11 > 10), so the boundary bucket must split by doc_id.
+    # Total 26 tokens -> budget floor(0.4*26)=10: doc1 (cum 5) and doc2
+    # (cum 8) are kept, the three-way score-20 tie crosses the budget at
+    # doc3 (cum 11 > 10), so the bucket splits by doc_id.
     rows = [
         (1, "xx", 30, "word " * 5),
         (2, "xx", 20, "word " * 3),
@@ -112,15 +85,9 @@ def test_token_budget_histogram_boundary_bucket_is_split(spark):
     )
     with tempfile.TemporaryDirectory() as d:
         df.coalesce(1).write.mode("overwrite").parquet(f"{d}/documents.parquet")
-        ref = sorted(tuple(r) for r in curation_token_budget(spark, d).collect())
-        twin = sorted(
-            tuple(r) for r in curation_token_budget_histogram(spark, d).collect()
-        )
-    assert twin == ref
-    # the kept set must be a strict subset of one score bucket plus the
-    # fully-kept higher bucket: n_kept strictly between 1 and 4
-    (lang, n_total, n_kept, budget, used, checksum) = ref[0]
-    assert n_total == 5 and 1 < n_kept < 5
+        got = [tuple(r) for r in curation_token_budget(spark, d).collect()]
+    # (lang, n_total, n_kept, budget_tokens, tokens_used, id_checksum)
+    assert got == [("xx", 5, 2, 10, 8, 3)]
 
 
 def test_keep_best_winner_null_and_overflow_semantics(spark):

@@ -123,25 +123,6 @@ def test_mmr_corpus_stage_is_broadcast_only(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_mmr_rounds_twin_identical_to_kernel(spark):
-    """The unregistered JVM round-loop twin must reproduce the kernel
-    lane row-for-row (the dissolve/dissolve_tiled discipline: two
-    execution strategies, one semantics)."""
-    from species_range_data_pipeline_spark.plans.retrieval import (
-        retrieval_mmr_diversify_rounds,
-    )
-
-    kern = [
-        tuple(r)
-        for r in retrieval_mmr_diversify(spark, SF_CORRECT).collect()
-    ]
-    rounds = [
-        tuple(r)
-        for r in retrieval_mmr_diversify_rounds(spark, SF_CORRECT).collect()
-    ]
-    assert kern == rounds
-
-
 def _candidate_sets(df):
     out: dict[int, set] = {}
     for r in df.collect():
@@ -546,7 +527,7 @@ def test_mmr_auto_dispatches_exact_below_cap_ivf_above(spark, monkeypatch):
 
 def test_mmr_ivf_warm_call_drops_quantizer_jobs(spark):
     """The amortization claim as a job-count pin (VERDICT r14 #4 /
-    BASELINE.md r15 note): with the session cache cleared, the first
+    0ba482d:BASELINE.md r15 note): with the session cache cleared, the first
     registered IVF call pays the quantizer-build jobs; the second call
     must replay the cached quantizer and run STRICTLY fewer jobs (the
     build is 3 of the cold lane's jobs) with identical rows."""

@@ -3,8 +3,6 @@
 - near_dup_lsh: precision must be exactly 1.0 (pairs are re-scored), recall
   measured against the brute-force emb_near_dup_bruteforce plan (DuckDB-oracle-checked
   itself, so this transitively anchors the LSH path).
-- cosine_topk_pandas: must return EXACTLY the same rows as the
-  fold-expression cosine_topk (same rounding, same tie-break).
 """
 
 from __future__ import annotations
@@ -12,7 +10,6 @@ import pytest
 
 from species_range_data_pipeline_spark.catalog import load_table
 from species_range_data_pipeline_spark.operators.similarity import (
-    cosine_topk_pandas,
     near_dup_lsh,
 )
 from species_range_data_pipeline_spark.plans.vectors import (
@@ -93,20 +90,6 @@ def test_lsh_components_match_union_find_on_recalled_pairs(spark):
     assert lsh_members <= brute_members  # precision 1.0: no false pairs
     coverage = len(lsh_members) / len(brute_members)
     assert coverage >= 0.9, f"clustered-vector coverage {coverage:.2f}"
-
-
-def test_pandas_topk_matches_expression_topk(spark):
-    got = [
-        (r.query_id, r.cand_id, r.cos_sim, r.rnk)
-        for r in cosine_topk_pandas(
-            load_table(spark, SF_CORRECT, "embeddings"), [0, 1, 2, 3, 4]
-        ).collect()
-    ]
-    want = [
-        (r.query_id, r.cand_id, r.cos_sim, r.rnk)
-        for r in cosine_topk(spark, SF_CORRECT).collect()
-    ]
-    assert got == want
 
 
 def test_map_in_arrow_norms_match_jvm(spark):
