@@ -1,9 +1,13 @@
-"""``tools/ab.py``'s summary on synthetic pairs: no Spark, no git."""
+"""``tools/ab.py``'s summary on synthetic pairs and its tree extraction on an
+in-memory tar: no Spark, no git."""
 
 from __future__ import annotations
 
 import importlib.util
+import io
+import json
 import statistics
+import tarfile
 from pathlib import Path
 
 import pytest
@@ -86,3 +90,33 @@ def test_no_values_on_a_side_gives_no_ratio():
     assert row["change"] is None
     assert row["ratio"] is None and row["within_bound"] is None
     assert "wall_s | 1 [1, 1] | - |" in ab.table(ab.summarize(pairs, METRICS[:1]))
+
+
+def _tar(files: dict[str, bytes]) -> bytes:
+    buf = io.BytesIO()
+    with tarfile.open(fileobj=buf, mode="w") as tar:
+        for name, data in files.items():
+            info = tarfile.TarInfo(name)
+            info.size = len(data)
+            tar.addfile(info, io.BytesIO(data))
+    return buf.getvalue()
+
+
+def test_extract_unpacks_the_tree_and_returns_its_benchmark(monkeypatch, tmp_path):
+    bench = {"run_seconds": 16, "workloads": [{"name": "w"}], "end_to_end": METRICS}
+    archive = _tar({
+        "BENCHMARK.json": json.dumps(bench).encode(),
+        "perfbench/run.py": b"print('run')\n",
+    })
+    calls = []
+    monkeypatch.setattr(ab, "git", lambda *args: calls.append(args) or archive)
+    # TarFile.extractall as it is before Python 3.11.4: no ``filter`` keyword
+    real = tarfile.TarFile.extractall
+    monkeypatch.setattr(
+        tarfile.TarFile, "extractall",
+        lambda self, path=".", members=None, *, numeric_owner=False:
+            real(self, path, members, numeric_owner=numeric_owner),
+    )
+    assert ab.extract("abc123", tmp_path / "change") == bench
+    assert calls == [("archive", "--format=tar", "abc123")]
+    assert (tmp_path / "change" / "perfbench" / "run.py").read_text() == "print('run')\n"

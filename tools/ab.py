@@ -42,8 +42,10 @@ def git(*args: str) -> bytes:
 
 def extract(tree: str, dest: Path) -> dict:
     """Unpack ``tree`` into ``dest``; return its BENCHMARK.json."""
+    # The archive is this repository's own tree.  No ``filter=``: that
+    # keyword is missing from TarFile.extractall before Python 3.11.4.
     with tarfile.open(fileobj=io.BytesIO(git("archive", "--format=tar", tree))) as tar:
-        tar.extractall(dest, filter="data")
+        tar.extractall(dest)
     return json.loads((dest / "BENCHMARK.json").read_text())
 
 
