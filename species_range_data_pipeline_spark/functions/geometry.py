@@ -6,144 +6,192 @@ dissolve (A1, ``:205``).  The model is SURVEY.md §1.3 option (b): a raster is
 long-format cell rows; polygonization is per-group numpy (driven from Spark
 via applyInPandas in operators/polygonize.py).
 
-Algorithm (pure numpy/dict, no GEOS):
-1. 4-connected components over kept cells (vectorized union-find-ish BFS).
-2. Boundary edges: each cell edge with no neighbor on the other side,
-   directed so the interior is on the LEFT — outer rings come out CCW,
-   holes CW, automatically.
-3. Walk edges into closed loops; at saddle vertices (two diagonal cells
-   touching) take the leftmost turn, which keeps diagonally-touching
-   components separate (matching 4-connectivity).
-4. Loops group by the component of their interior cell -> one exterior ring
-   + holes per component; collinear vertices collapsed.
+Algorithm (numpy, no GEOS, no per-cell Python loop, no dense grid):
+1. Unique cells sorted row-major on a packed int64 key.  Each axis is
+   gap-compressed first (consecutive values stay consecutive, larger gaps
+   shrink to 2), so adjacency is kept and the key fits int64 however sparse
+   the cells are: memory and time stay O(n log n).
+2. Right/down neighbours by ``np.searchsorted`` on the keys; 4-connected
+   components by hooking roots onto the smaller root plus pointer jumping.
+3. Boundary edges from the neighbour masks: each cell side with no cell
+   across it, directed so the interior is on the LEFT — outer rings come out
+   CCW, holes CW.
+4. One successor edge per edge at its end vertex.  At a saddle vertex (two
+   diagonal cells touching) the leftmost turn wins, which keeps diagonally
+   touching components apart (4-connectivity).  Straight runs are jumped, so
+   only corner vertices are kept (no collinear vertices).
+5. A Python loop over corner edges closes the rings; rings group by the
+   component of their cells, exterior (CCW) first, then the holes.
 
-Cell (row, col) maps to the unit square x in [col, col+1], y in
-[flip - row - 1 + ... ] — callers pass an affine (x0, y0, cellsize, nrows)
-so output coordinates are georeferenced like the reference's rasters.
+Cell (row, col) maps to x in [col, col+1]; callers pass an affine
+(x0, y0, cellsize, nrows) so output coordinates are georeferenced like the
+reference's rasters.
 """
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 
-from .wkb import Ring, encode_multipolygon, encode_polygon, ring_signed_area
+from .wkb import _MULTIPOLYGON, _POLYGON
+
+# Corner k of a cell in (col, row) offsets, row growing downwards: CCW from
+# the bottom-left.  Boundary edge d runs from corner d to corner d+1, so in
+# y-up space its direction is d = 0 +x, 1 +y, 2 -x, 3 -y and a left turn is
+# d+1.  Edge d exists where the cell has no neighbour below (0), right (1),
+# above (2) or left (3).
+_CORNER_DC = np.array([0, 1, 1, 0])
+_CORNER_DR = np.array([1, 1, 0, 0])
+
+
+def _compress(v: np.ndarray) -> np.ndarray:
+    """Monotone relabel to 1, 2, ...: neighbouring values stay neighbours,
+    gaps shrink to 2.  Leaves 0 free below and the span at most 2n."""
+    u, inv = np.unique(v, return_inverse=True)
+    step = np.where(np.diff(u) == 1, 1, 2)
+    return np.concatenate(([1], 1 + np.cumsum(step)))[inv]
+
+
+def _lattice(rows, cols):
+    """Unique cells, row-major.  Returns original (r, c), compressed
+    (rr, cc), the row stride ``w`` of the packed key ``rr * w + cc``, the
+    right and down neighbour index of each cell (-1 where absent) and the
+    inverse map from the input positions to the unique cells."""
+    rows = np.asarray(rows, dtype=np.int64)
+    cols = np.asarray(cols, dtype=np.int64)
+    rr, cc = _compress(rows), _compress(cols)
+    w = int(cc.max()) + 2  # vertex columns reach cc + 1 < w
+    key, first, inv = np.unique(rr * w + cc, return_index=True, return_inverse=True)
+    n = len(key)
+    neighbours = []
+    for offset in (1, w):
+        probe = key + offset
+        pos = np.minimum(np.searchsorted(key, probe), n - 1)
+        neighbours.append(np.where(key[pos] == probe, pos, -1))
+    right, down = neighbours
+    return rows[first], cols[first], rr[first], cc[first], w, right, down, inv
+
+
+def _components(right: np.ndarray, down: np.ndarray) -> np.ndarray:
+    """Component labels 0..k-1, numbered by each component's first cell."""
+    a = np.concatenate((np.flatnonzero(right >= 0), np.flatnonzero(down >= 0)))
+    b = np.concatenate((right[right >= 0], down[down >= 0]))
+    parent = np.arange(len(right))
+    while a.size:
+        pa, pb = parent[a], parent[b]
+        split = pa != pb
+        a, b, pa, pb = a[split], b[split], pa[split], pb[split]
+        # hook each root onto a smaller one, then jump to the roots: a
+        # component's smallest cell is never hooked, so it ends as the root
+        parent[np.maximum(pa, pb)] = np.minimum(pa, pb)
+        while True:
+            grand = parent[parent]
+            if np.array_equal(grand, parent):
+                break
+            parent = grand
+    return np.unique(parent, return_inverse=True)[1]
 
 
 def label_components(rows: np.ndarray, cols: np.ndarray) -> np.ndarray:
-    """4-connected component labels for cell set {(rows[i], cols[i])}.
-
-    Union-find with path compression over vectorized neighbor matching:
-    sort-free, O(n α(n)); no dense grid materialized (cells can be sparse
-    in a huge raster).
-    """
-    n = len(rows)
-    parent = np.arange(n)
-
-    def find(i: int) -> int:
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
-
-    def union(i: int, j: int) -> None:
-        ri, rj = find(i), find(j)
-        if ri != rj:
-            parent[max(ri, rj)] = min(ri, rj)
-
-    key = {(int(r), int(c)): i for i, (r, c) in enumerate(zip(rows, cols))}
-    for i in range(n):
-        r, c = int(rows[i]), int(cols[i])
-        for dr, dc in ((0, 1), (1, 0)):
-            j = key.get((r + dr, c + dc))
-            if j is not None:
-                union(i, j)
-    roots = np.fromiter((find(i) for i in range(n)), dtype=np.int64, count=n)
-    # densify labels to 0..k-1 in first-seen order for determinism
-    _, labels = np.unique(roots, return_inverse=True)
-    return labels
+    """4-connected component label of each input cell (duplicates share
+    one); components are numbered in row-major order of their first cell."""
+    if len(rows) == 0:
+        return np.zeros(0, dtype=np.int64)
+    *_, right, down, inv = _lattice(rows, cols)
+    return _components(right, down)[inv]
 
 
-def _boundary_edges(cells: set[tuple[int, int]]):
-    """Directed boundary edges (interior on the left), in grid vertex space
-    where cell (r, c) spans x [c, c+1], y [-r-1, -r] (y up = north)."""
-    edges = []  # (start, end, owner_cell)
-    for r, c in cells:
-        x0, x1 = c, c + 1
-        y0, y1 = -r - 1, -r  # y1 is the top of the cell
-        if (r + 1, c) not in cells:  # no neighbor below -> bottom edge, +x
-            edges.append(((x0, y0), (x1, y0), (r, c)))
-        if (r, c + 1) not in cells:  # right edge, +y
-            edges.append(((x1, y0), (x1, y1), (r, c)))
-        if (r - 1, c) not in cells:  # top edge, -x
-            edges.append(((x1, y1), (x0, y1), (r, c)))
-        if (r, c - 1) not in cells:  # left edge, -y
-            edges.append(((x0, y1), (x0, y0), (r, c)))
-    return edges
+def _polygons(rows, cols, x0, y0, cellsize, nrows):
+    """Kept cells -> (polygon WKB per component, cells per component).
 
+    Components are numbered in row-major order of their first cell; each
+    polygon holds its exterior ring, then its holes."""
+    r, c, rr, cc, w, right, down, _ = _lattice(rows, cols)
+    labels = _components(right, down)
 
-def _walk_loops(edges):
-    """Assemble directed edges into closed loops; leftmost turn at forks."""
-    out_map: dict[tuple[int, int], list[int]] = {}
-    for idx, (s, _e, _o) in enumerate(edges):
-        out_map.setdefault(s, []).append(idx)
-    used = [False] * len(edges)
-    loops = []
-    for start_idx in range(len(edges)):
-        if used[start_idx]:
+    # 3. boundary edges, grouped by direction then cell
+    open_ = np.ones((4, len(r)), dtype=bool)
+    open_[0] = down < 0
+    open_[1] = right < 0
+    open_[2, down[down >= 0]] = False
+    open_[3, right[right >= 0]] = False
+    d, cell = np.nonzero(open_)
+    d_end = (d + 1) & 3
+    start = (rr[cell] + _CORNER_DR[d]) * w + cc[cell] + _CORNER_DC[d]
+    end = (rr[cell] + _CORNER_DR[d_end]) * w + cc[cell] + _CORNER_DC[d_end]
+
+    # 4. successor at the end vertex; a saddle offers two, take the left turn
+    n_edges = len(d)
+    order = np.argsort(start, kind="stable")
+    first = np.searchsorted(start[order], end)
+    second = np.minimum(first + 1, n_edges - 1)
+    saddle = (first + 1 < n_edges) & (start[order[second]] == end)
+    nxt = order[first]
+    nxt = np.where(saddle & (d[nxt] != d_end), order[second], nxt)
+    corner = d[nxt] != d  # the edge's end vertex is a ring vertex
+    jump = nxt.copy()
+    while True:
+        straight = ~corner[jump]
+        if not straight.any():
+            break
+        jump[straight] = jump[jump[straight]]
+    corners = np.flatnonzero(corner)
+    succ = np.searchsorted(corners, jump[corners]).tolist()
+
+    # 5. close the rings: positions into ``corners``, ring after ring
+    seen = bytearray(len(succ))
+    walk: list[int] = []
+    ring_start: list[int] = []
+    for s in range(len(succ)):
+        if seen[s]:
             continue
-        loop_idx = [start_idx]
-        used[start_idx] = True
-        _s, cur_end, _o = edges[start_idx]
-        cur_dir = _direction(edges[start_idx])
-        while cur_end != edges[start_idx][0]:
-            candidates = [i for i in out_map.get(cur_end, []) if not used[i]]
-            if not candidates:
-                raise ValueError("open boundary loop — input cells inconsistent")
-            nxt = _leftmost(candidates, cur_dir, edges)
-            used[nxt] = True
-            loop_idx.append(nxt)
-            cur_end = edges[nxt][1]
-            cur_dir = _direction(edges[nxt])
-        loops.append(loop_idx)
-    return loops
+        ring_start.append(len(walk))
+        i = s
+        while not seen[i]:
+            seen[i] = 1
+            walk.append(i)
+            i = succ[i]
+    e = corners[np.asarray(walk)]
+    starts = np.asarray(ring_start)
+    ends = np.append(starts[1:], len(e))
+    vc_cmp = cc[cell[e]] + _CORNER_DC[d_end[e]]
+    vr_cmp = rr[cell[e]] + _CORNER_DR[d_end[e]]
+    # orientation from the compressed lattice (exact, and monotone per axis
+    # so the sign is the real ring's): twice the y-up signed area
+    succ_v = np.arange(1, len(e) + 1)
+    succ_v[ends - 1] = starts
+    twice = np.add.reduceat(vc_cmp[succ_v] * vr_cmp - vc_cmp * vr_cmp[succ_v], starts)
+    ring_comp = labels[cell[e[starts]]]
+    exterior = twice > 0
+    n_comp = int(labels.max()) + 1
+    if not np.array_equal(np.bincount(ring_comp[exterior], minlength=n_comp), np.ones(n_comp)):
+        raise ValueError("a component without exactly one exterior ring — cells inconsistent")
 
+    # georeference the ring vertices, each ring closed by its first vertex
+    vx = c[cell[e]] + _CORNER_DC[d_end[e]]
+    vrow = r[cell[e]] + _CORNER_DR[d_end[e]]
+    x = x0 + vx * cellsize
+    y = y0 + ((nrows - vrow) if nrows is not None else -vrow) * cellsize
+    closed = np.insert(np.arange(len(e)), ends, starts)
+    xy = np.empty((len(closed), 2), dtype="<f8")
+    xy[:, 0], xy[:, 1] = x[closed], y[closed]
+    offsets = (starts + np.arange(len(starts))).tolist()
+    lengths = (ends - starts + 1).tolist()
 
-def _direction(edge):
-    (sx, sy), (ex, ey), _ = edge
-    return (ex - sx, ey - sy)
-
-
-def _leftmost(candidates, cur_dir, edges):
-    """Pick the outgoing edge turning most to the left of cur_dir.
-    Turn preference: left turn > straight > right turn > U-turn."""
-    def turn_rank(i):
-        dx, dy = _direction(edges[i])
-        cx, cy = cur_dir
-        cross = cx * dy - cy * dx  # >0 left, 0 straight/U, <0 right
-        dot = cx * dx + cy * dy
-        if cross > 0:
-            return 0
-        if cross == 0 and dot > 0:
-            return 1
-        if cross < 0:
-            return 2
-        return 3
-    return min(candidates, key=turn_rank)
-
-
-def _simplify(ring: Ring) -> Ring:
-    """Drop collinear intermediate vertices (axis-aligned grid rings)."""
-    if len(ring) < 3:
-        return ring
-    out = []
-    n = len(ring)
-    for i in range(n):
-        px, py = ring[i - 1]
-        cx, cy = ring[i]
-        nx, ny = ring[(i + 1) % n]
-        if (cx - px) * (ny - cy) != (cy - py) * (nx - cx):
-            out.append((cx, cy))
-    return out
+    ring_order = np.lexsort((~exterior, ring_comp))  # stable: holes keep walk order
+    rings_per_comp = np.bincount(ring_comp, minlength=n_comp).tolist()
+    polygons = []
+    k = 0
+    for n_rings in rings_per_comp:
+        out = [struct.pack("<BII", 1, _POLYGON, n_rings)]
+        for i in ring_order[k:k + n_rings].tolist():
+            o, n = offsets[i], lengths[i]
+            out.append(struct.pack("<I", n))
+            out.append(xy[o:o + n].tobytes())
+        polygons.append(b"".join(out))
+        k += n_rings
+    return polygons, np.bincount(labels)
 
 
 def polygonize_cells(
@@ -156,54 +204,18 @@ def polygonize_cells(
 ) -> list[tuple[int, bytes, int, float]]:
     """Polygonize kept cells -> [(component_id, polygon_wkb, n_cells, area)].
 
-    Affine: x = x0 + col*cellsize; y = y0 + (nrows - row - 1)*cellsize when
-    ``nrows`` given (ASCII-grid row order, ``species_range_etl.py:59-74``),
-    else y = -row*cellsize.
+    Duplicate cells count once.  Affine: x = x0 + col*cellsize;
+    y = y0 + (nrows - row - 1)*cellsize when ``nrows`` given (ASCII-grid
+    row order, ``species_range_etl.py:59-74``), else y = -row*cellsize.
+    ``area`` is ``n_cells * cellsize**2``, the exact area of the rings.
     """
     if len(rows) == 0:
         return []
-    rows = np.asarray(rows, dtype=np.int64)
-    cols = np.asarray(cols, dtype=np.int64)
-    labels = label_components(rows, cols)
-    cells = {(int(r), int(c)) for r, c in zip(rows, cols)}
-    cell_label = {
-        (int(r), int(c)): int(l) for r, c, l in zip(rows, cols, labels)
-    }
-    edges = _boundary_edges(cells)
-    loops = _walk_loops(edges)
-
-    def to_geo(pt):
-        gx, gy = pt
-        if nrows is not None:
-            # grid y = -r-1..-r  ->  geo y = y0 + (nrows + gy) * cellsize
-            return (x0 + gx * cellsize, y0 + (nrows + gy) * cellsize)
-        return (x0 + gx * cellsize, y0 + gy * cellsize)
-
-    by_component: dict[int, dict[str, list[Ring]]] = {}
-    for loop_idx in loops:
-        ring = [edges[i][0] for i in loop_idx]
-        owner = edges[loop_idx[0]][2]
-        comp = cell_label[owner]
-        ring_geo = _simplify([to_geo(p) for p in ring])
-        bucket = by_component.setdefault(comp, {"outer": [], "holes": []})
-        if ring_signed_area(ring_geo) > 0:
-            bucket["outer"].append(ring_geo)
-        else:
-            bucket["holes"].append(ring_geo)
-
-    counts = np.bincount(labels)
-    results = []
-    for comp in sorted(by_component):
-        bucket = by_component[comp]
-        if len(bucket["outer"]) != 1:
-            raise ValueError(
-                f"component {comp}: expected 1 exterior ring, got {len(bucket['outer'])}"
-            )
-        rings = bucket["outer"] + bucket["holes"]
-        wkb = encode_polygon(rings)
-        area = sum(ring_signed_area(r) for r in rings)
-        results.append((int(comp), wkb, int(counts[comp]), float(area)))
-    return results
+    polygons, counts = _polygons(rows, cols, x0, y0, cellsize, nrows)
+    return [
+        (comp, wkb, int(n), float(n) * cellsize * cellsize)
+        for comp, (wkb, n) in enumerate(zip(polygons, counts.tolist()))
+    ]
 
 
 def union_cells_to_multipolygon(
@@ -218,15 +230,8 @@ def union_cells_to_multipolygon(
     polygonize, emit (MultiPolygon WKB, total area, polygon count,
     unique-cell count)."""
     if len(rows) == 0:
-        return encode_multipolygon([]), 0.0, 0, 0
-    uniq = np.unique(np.stack([np.asarray(rows), np.asarray(cols)], axis=1), axis=0)
-    parts = polygonize_cells(uniq[:, 0], uniq[:, 1], x0, y0, cellsize, nrows)
-    from .wkb import decode
-
-    polys = []
-    total_area = 0.0
-    for _comp, wkb, _n, area in parts:
-        _, rings = decode(wkb)
-        polys.extend(rings)
-        total_area += area
-    return encode_multipolygon(polys), float(total_area), len(parts), len(uniq)
+        return struct.pack("<BII", 1, _MULTIPOLYGON, 0), 0.0, 0, 0
+    polygons, counts = _polygons(rows, cols, x0, y0, cellsize, nrows)
+    n_cells = int(counts.sum())
+    wkb = struct.pack("<BII", 1, _MULTIPOLYGON, len(polygons)) + b"".join(polygons)
+    return wkb, float(n_cells) * cellsize * cellsize, len(polygons), n_cells

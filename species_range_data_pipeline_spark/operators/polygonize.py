@@ -8,20 +8,22 @@ are ``applyInPandas`` over the long-format cell model — Arrow-batched, one
 numpy kernel call per group, no Python row loop.
 
 Scale notes:
-- Group = (raster key..., threshold): bounded by one raster's kept cells, so
-  executor memory is bounded by raster size, not table size.  Rasters too
-  large for one task would be tiled first (tile key appended to the group)
-  and stitched with the same cell-space union used by dissolve.
-- Dissolve unions cell SETS, not WKB blobs: distinct() dedupes map-side
-  before the shuffle, which is the two-level (partial-then-final) union
-  SURVEY.md §7 calls for.  The expensive polygonize runs once per output
-  group, after the cheap set union.
+- Group = (raster key..., threshold) for polygonize, the scenario key for
+  the ETL's dissolve: bounded by one raster's kept cells, so executor
+  memory is bounded by raster size, not table size.  Groups too large for
+  one task go to ``dissolve_tiled`` (tile key appended to the group,
+  parts concatenated per group).
+- Dissolve unions cell SETS, not WKB blobs: one hash exchange on the group
+  key, then the JVM dedupes cells (``max(value)`` when thresholds nest)
+  before Arrow hands each group to Python once.  The polygonize kernel runs
+  once per output row, after the cheap set union.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -101,27 +103,44 @@ def dissolve(
     cellsize: float = 1.0,
     nrows: int | None = None,
     num_partitions: int | None = None,
+    thresholds: Sequence[float] | None = None,
 ) -> DataFrame:
     """GROUP BY ``by`` with geometry -> union (A1).  Input is cell rows;
     output one MultiPolygon per group with its area and part count.
 
-    Shuffle strategy — the SURVEY.md §7 two-level union, concretely:
-    1. JVM pre-aggregation groupBy(by, row, col): HashAggregate partial
-       collapses duplicate cells MAP-SIDE, so the shuffle and (crucially)
-       the Arrow->Python transfer carry unique cells only — at sf0.1 this is
-       ~100x fewer rows into the pandas kernel.
-    2. applyInPandas on the group key runs the polygonize kernel once per
-       output group (np.unique stays as a safety net).
-    ``num_partitions``: see polygonize — caps Python-worker fan-out when the
-    group cardinality is known-small.
+    ``thresholds``: nested levels over a ``value`` column (the reference's
+    per-threshold ``Con``, ``species_range_etl.py:123-125``).  A cell is in
+    level t's union iff the max of its duplicates' values is >= t, so one
+    kernel call per group emits one row per distinct level that keeps a
+    cell, with a ``threshold`` (double) column after ``by``.  ``None`` is
+    one level that keeps every cell, and no ``threshold`` column.
+
+    Plan: filter at the lowest level, ``repartition(by)``, then the JVM
+    dedupe on (by, row, col, affine) with ``max(value)`` and the grouped
+    kernel.  The dedupe and the kernel are satisfied by the repartition's
+    hash partitioning, so the whole dissolve is one exchange.
+    ``num_partitions``: see polygonize — caps Python-worker fan-out when
+    the group cardinality is known-small; the explicit count also keeps
+    AQE from coalescing the groups onto one task.
     """
     by = list(by)
     affine_cols = [c for c in ("xll", "yll", "cellsize", "nrows") if c in cells.columns]
-    deduped = cells.groupBy(*by, "row", "col", *affine_cols).agg(
-        F.count(F.lit(1)).alias("_dup_count")
-    )
+    key = by + ["row", "col"] + affine_cols
+    levels = None if thresholds is None else sorted({float(t) for t in thresholds})
+    if levels is not None:
+        if not levels or "threshold" in by:
+            raise ValueError("thresholds need at least one level and no 'threshold' key")
+        cells = cells.where(F.col("value") >= levels[0])
+    spread = cells.repartition(num_partitions, *by) if num_partitions else cells.repartition(*by)
+    if levels is None:
+        deduped = spread.select(*key).distinct()
+        level_cols = []
+    else:
+        deduped = spread.groupBy(*key).agg(F.max("value").alias("value"))
+        level_cols = [T.StructField("threshold", T.DoubleType())]
     schema = T.StructType(
         [cells.schema[c] for c in by]
+        + level_cols
         + [
             T.StructField("geometry", T.BinaryType()),
             T.StructField("area", T.DoubleType()),
@@ -129,20 +148,25 @@ def dissolve(
             T.StructField("n_cells", T.LongType()),
         ]
     )
+    columns = schema.fieldNames()
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = {c: pdf[c].iloc[0] for c in by}
-        gx0, gy0, gcs, gnr = _affine_of(pdf, (x0, y0, cellsize, nrows))
-        wkb, area, n_parts, n_cells = union_cells_to_multipolygon(
-            pdf["row"].to_numpy(), pdf["col"].to_numpy(), gx0, gy0, gcs, gnr
-        )
-        return pd.DataFrame(
-            [{**keys, "geometry": wkb, "area": area, "n_parts": n_parts, "n_cells": n_cells}],
-            columns=by + ["geometry", "area", "n_parts", "n_cells"],
-        )
+        keys = [pdf[c].iloc[0] for c in by]
+        affine = _affine_of(pdf, (x0, y0, cellsize, nrows))
+        rows, cols = pdf["row"].to_numpy(), pdf["col"].to_numpy()
+        if levels is None:
+            return pd.DataFrame(
+                [keys + list(union_cells_to_multipolygon(rows, cols, *affine))], columns=columns
+            )
+        value = pdf["value"].to_numpy()
+        out = []
+        for t in levels:
+            # Spark orders NaN above every number, so a NaN cell is kept
+            keep = (value >= t) | np.isnan(value)
+            if keep.any():
+                out.append(keys + [t, *union_cells_to_multipolygon(rows[keep], cols[keep], *affine)])
+        return pd.DataFrame(out, columns=columns)
 
-    if num_partitions:
-        deduped = deduped.repartition(num_partitions, *by)
     return deduped.groupBy(*by).applyInPandas(fn, schema)
 
 
@@ -167,6 +191,7 @@ def dissolve_auto(
     cellsize: float = 1.0,
     nrows: int | None = None,
     num_partitions: int | None = None,
+    thresholds: Sequence[float] | None = None,
 ) -> DataFrame:
     """Size-dispatched dissolve (VERDICT r12 #3): plain kernel for small
     groups, tiled two-level kernel above ``threshold_cells`` per group.
@@ -178,22 +203,30 @@ def dissolve_auto(
     superlinear and eventually OOMs, so the caller-must-know dispatch
     was the one structural 100x-scale concern left in the geo family.
 
-    Sizing pass: ONE aggregation-only job over the raw cell stream
-    (``groupBy(by).count() -> max``) — all JVM, partial-aggregated
+    Sizing pass: ONE aggregation-only job over the raw cell stream (with
+    ``thresholds``, the cells at or above the lowest level: the nested
+    groups) — ``groupBy(by).count() -> max``, all JVM, partial-aggregated
     map-side, no Python.  Raw row count is an UPPER bound on a group's
-    unique cells (duplicates inflate it), so routing is conservative:
-    duplication can only send a workload to the tiled kernel early,
-    never keep an over-threshold group on the single-task kernel.  The
-    returned plan is byte-identical to ``dissolve(...)`` below the
-    threshold (pinned in tests/test_geometry.py); above it, the tiled
-    plan — same region/area/cell-count, ``n_parts`` split along tile
-    edges (see ``dissolve_tiled``).
+    unique cells at every level (duplicates inflate it), so routing is
+    conservative: duplication can only send a workload to the tiled
+    kernel early, never keep an over-threshold group on the single-task
+    kernel.  The returned plan is byte-identical to ``dissolve(...)``
+    below the threshold (pinned in tests/test_geometry.py); above it, the
+    tiled plan, with the levels exploded into a ``threshold`` key — same
+    region/area/cell-count, ``n_parts`` split along tile edges (see
+    ``dissolve_tiled``).
     """
     by = list(by)
-    max_n = cells.groupBy(*by).count().agg(F.max("count")).first()[0]
+    sized = cells if thresholds is None else cells.where(F.col("value") >= min(thresholds))
+    max_n = sized.groupBy(*by).count().agg(F.max("count")).first()[0]
     if max_n is None or max_n <= threshold_cells:
-        return dissolve(cells, by, x0, y0, cellsize, nrows, num_partitions)
-    return dissolve_tiled(cells, by, tile_size, x0, y0, cellsize, nrows)
+        return dissolve(cells, by, x0, y0, cellsize, nrows, num_partitions, thresholds)
+    if thresholds is None:
+        return dissolve_tiled(cells, by, tile_size, x0, y0, cellsize, nrows)
+    fanned = sized.withColumn(
+        "threshold", F.explode(F.array(*[F.lit(float(t)) for t in sorted(set(thresholds))]))
+    ).where(F.col("value") >= F.col("threshold"))
+    return dissolve_tiled(fanned, by + ["threshold"], tile_size, x0, y0, cellsize, nrows)
 
 
 def dissolve_tiled(

@@ -9,13 +9,13 @@ silent failure is an error-channel row.
     zips (binaryFile) --decode_zips--> cell + error rows
                                           (T1-T3: unzip and decode in ONE
                                            Python call; stored once per pass)
-      cells x thresholds[0.25,0.5,0.75]  (X1: literal explode, no join)
-      filter value >= threshold           (F3)
-      polygonize per (species,file,thr)   (T4: applyInPandas)
       filename -> attributes              (T6: column expressions)
-      dissolve by species+scenario key    (A1: cell-space union, one
-                                           task per core)
-      area                                (C1: shoelace, square degrees)
+      dissolve by species+scenario key,   (X1+F3+T4+A1: the thresholds
+        one row per threshold              nest — one exchange, max(value)
+                                           per cell, one Python call per
+                                           scenario, one task per core)
+      area                                (C1: cells x cellsize², square
+                                           degrees, from the kernel)
       sid                                 (P5: row_number over explicit order)
       sink                                (K1: parquet native / JDBC adapter)
 
@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.polygonize import dissolve_auto, polygonize
+from ..operators.polygonize import dissolve_auto
 from .geotiff import decode_raster_members
 from .raster import decode_zips, read_binary_files
 
@@ -113,32 +113,29 @@ def run_pipeline(
     area).
     """
     thresholds = thresholds or THRESHOLDS
-    # X1: literal threshold fan-out — explode, not a join (3x rows, 0 shuffle)
-    fanned = cells.withColumn(
-        "threshold", F.explode(F.array(*[F.lit(t) for t in thresholds]))
-    )
-    # F3: map-algebra predicate (arcpy.sa.Con at species_range_etl.py:123-125)
-    kept = fanned.where(F.col("value") >= F.col("threshold"))
     # T6 on the member name
-    attributed = parse_scenario_attributes(kept)
-    # threshold as string "25"/"50"/"75" for reference fidelity (:190,200)
-    attributed = attributed.withColumn(
-        "threshold", (F.col("threshold") * 100).cast("int").cast("string")
-    )
-    # A1: dissolve by the full attribute key; geometry union in cell space.
-    # (GeoPandas dissolve(by="species") runs per shapefile == per attribute
-    # combination; the engine groups once, globally — same result, one job.)
-    # Size-dispatched (SCALE.md rule 49): groups above the measured ~2M-cell
-    # crossover route to the tiled two-level kernel automatically.
+    attributed = parse_scenario_attributes(cells)
+    # X1+F3+A1: the thresholds nest (arcpy.sa.Con at
+    # species_range_etl.py:123-125), so one dissolve per scenario key keeps
+    # the cells at or above the lowest threshold and emits one geometry per
+    # threshold that keeps a cell.  (GeoPandas dissolve(by="species") runs
+    # per shapefile == per attribute combination; the engine groups once,
+    # globally — same result, one job.)  Size-dispatched (SCALE.md rule
+    # 49): groups above the measured ~2M-cell crossover route to the tiled
+    # two-level kernel automatically.
     dissolved = dissolve_auto(
         attributed,
-        by=["species", "threshold", "source", "year", "scenario"],
-        # grid georeferencing: all fixture rasters share the affine; per-file
-        # affines would tile the group key (see operators/polygonize.py)
-        # An explicit repartition (shuffle origin REPARTITION_BY_NUM) spreads
-        # the groups over every core: AQE does not coalesce it, whereas the
-        # groupBy's own few-MB shuffle coalesces to ONE Python task.
+        by=["species", "source", "year", "scenario"],
+        thresholds=thresholds,
+        # grid georeferencing: a group's rasters share one affine (see
+        # operators/polygonize.py::_affine_of).
+        # An explicit repartition count (shuffle origin REPARTITION_BY_NUM)
+        # spreads the groups over every core: AQE does not coalesce it.
         num_partitions=cells.sparkSession.sparkContext.defaultParallelism,
+    )
+    # threshold as string "25"/"50"/"75" for reference fidelity (:190,200)
+    dissolved = dissolved.withColumn(
+        "threshold", (F.col("threshold") * 100).cast("int").cast("string")
     )
     # C1 (area already computed by the dissolve kernel in square units),
     # P4 (species_id surrogate from the component count stand-in) and

@@ -9,8 +9,6 @@ Window bounds are rendered as formatted strings so the value hash is
 engine-neutral.
 """
 
-from __future__ import annotations
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -2020,15 +2018,15 @@ def window_udaf_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     on list-lambda index semantics.
     """
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    import pandas as pd  # the UDF type hints below read it at def time
+    from pyspark.sql.functions import pandas_udf
 
     def ewma_fn(v: pd.Series) -> float:
         x = v.to_numpy(dtype=float)
         w = 0.8 ** np.arange(len(x) - 1, -1, -1)
         return float(np.round((x * w).sum() / w.sum(), 6))
 
-    ewma = pandas_udf(ewma_fn, "double", PandasUDFType.GROUPED_AGG)
+    ewma = pandas_udf(ewma_fn, "double")
     events = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")

@@ -43,7 +43,9 @@ def _cells_from_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def geo_dissolve_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1+C1: grouped geometric union and its area, numerics oracle-checked."""
-    cells = _cells_from_lineitem(spark, sf_dir)
+    # many lineitems share a cell: distinct() collapses them map-side,
+    # before the dissolve's own exchange (which shuffles every input row)
+    cells = _cells_from_lineitem(spark, sf_dir).distinct()
     # 3 flags x 3 thresholds = 9 groups: cap the Python stage at 9 tasks
     out = dissolve(cells, by=["species", "threshold_s"], num_partitions=9)
     return (
@@ -448,7 +450,7 @@ def geo_dissolve_area_m2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``geo_dissolve_area``'s count-times-cellsize identity."""
     from ..operators.polygonize import with_area, with_area_m2, with_transformed
 
-    cells = _cells_from_lineitem(spark, sf_dir)
+    cells = _cells_from_lineitem(spark, sf_dir).distinct()  # see geo_dissolve_area
     d = dissolve(cells, by=["species", "threshold_s"], num_partitions=9)
     d = with_area_m2(d).withColumnRenamed("area", "area_sqdeg")
     t = with_area(with_transformed(d, src_epsg=4326, dst_epsg=6933))
@@ -534,7 +536,7 @@ def geo_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pandas as pd
 
-    cells = _cells_from_lineitem(spark, sf_dir)
+    cells = _cells_from_lineitem(spark, sf_dir).distinct()  # see geo_dissolve_area
     d = dissolve(cells, by=["species", "threshold_s"], num_partitions=9)
 
     def probe(batches):
@@ -728,7 +730,7 @@ def _range_overlap_from_cells(
     # lazy localCheckpoint makes every downstream reference read the
     # same materialized rows: the dissolve runs exactly once.
     d = (
-        dissolve(cells, by=["species"], num_partitions=num_partitions)
+        dissolve(cells.distinct(), by=["species"], num_partitions=num_partitions)
         .select("species", "geometry")
         .join(F.broadcast(boxes), "species")
         .transform(materialize_once)

@@ -15,8 +15,6 @@
   variant of plans/text.py's lexical dedup family).
 """
 
-from __future__ import annotations
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -484,19 +482,20 @@ def emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-label across the exploded rows.
     """
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    import pandas as pd  # the UDF type hints below read it at def time
+    from pyspark.sql.functions import pandas_udf
 
     def centroid_fn(v: pd.Series) -> list:
         m = np.mean(np.stack(v.to_numpy()), axis=0)
         return [float(x) for x in np.round(m, 6)]
 
-    centroid = pandas_udf(centroid_fn, "array<double>", PandasUDFType.GROUPED_AGG)
+    def count_fn(v: pd.Series) -> int:
+        return len(v)
+
+    centroid = pandas_udf(centroid_fn, "array<double>")
     # Spark refuses to mix a GROUPED_AGG pandas UDAF with JVM aggregates
     # in one agg() — the count rides a second pandas UDAF
-    n_fn = pandas_udf(
-        lambda v: len(v), "long", PandasUDFType.GROUPED_AGG
-    )
+    n_fn = pandas_udf(count_fn, "long")
     emb = load_table(spark, sf_dir, "embeddings")
     return (
         emb.select("label", as_double("embedding").alias("v"))

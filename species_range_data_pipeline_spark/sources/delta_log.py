@@ -64,8 +64,6 @@ for NULL) and are absent from the data files; the last ``add`` for a
 path wins, and a ``remove`` tombstones it.
 """
 
-from __future__ import annotations
-
 import json
 import os
 import re
@@ -688,10 +686,12 @@ def _apply_deletion_vectors(
     cols = df.columns
     blobs = {f: load_dv_bytes(path, d) for f, d in dv_map.items()}
     bc = spark.sparkContext.broadcast(blobs)
+    # the UDF's type hints are evaluated here (this module does not
+    # postpone annotations), so pandas loads only when a DV mask is built
+    import pandas as pd
 
-    def _keep_fn(fp, pos):
+    def _keep_fn(fp: pd.Series, pos: pd.Series) -> pd.Series:
         import numpy as np
-        import pandas as pd
         from urllib.parse import unquote as _unq
 
         from .dv import decode_rbm_array as _dec
@@ -730,9 +730,7 @@ def _apply_deletion_vectors(
             keep[m] = ~hit
         return pd.Series(keep)
 
-    from pyspark.sql.pandas.functions import PandasUDFType
-
-    _dv_keep = F.pandas_udf(_keep_fn, "boolean", PandasUDFType.SCALAR)
+    _dv_keep = F.pandas_udf(_keep_fn, "boolean")
 
     return (
         df.withColumn("__row_path", F.col("_metadata.file_path"))

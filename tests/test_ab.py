@@ -120,3 +120,28 @@ def test_extract_unpacks_the_tree_and_returns_its_benchmark(monkeypatch, tmp_pat
     assert ab.extract("abc123", tmp_path / "change") == bench
     assert calls == [("archive", "--format=tar", "abc123")]
     assert (tmp_path / "change" / "perfbench" / "run.py").read_text() == "print('run')\n"
+
+
+def test_elapsed_seconds_are_recorded_and_summarized(monkeypatch, tmp_path):
+    class Proc:
+        returncode = 0
+        stdout = json.dumps({"correct": True, "metrics": {"wall_s": {"value": 2.0}}})
+        stderr = ""
+
+    clock = iter([10.0, 13.5])
+    monkeypatch.setattr(ab.time, "perf_counter", lambda: next(clock))
+    monkeypatch.setattr(ab.subprocess, "run", lambda *a, **k: Proc())
+    rec = ab.run(tmp_path, {"run_seconds": 16}, "w", 1)
+    assert rec["ok"] and rec["elapsed_s"] == 3.5
+
+    pairs = _pairs([1.0, 1.0, 1.0], [1.0, 1.0, 1.0])
+    for p, (a, b) in zip(pairs, ((60.0, 50.0), (62.0, 70.0), (58.0, 40.0))):
+        p["parent"]["elapsed_s"], p["change"]["elapsed_s"] = a, b
+    pairs[2]["change"]["ok"] = False  # a failed run's time still counts
+    out = ab.summarize(pairs, METRICS[:1])
+    assert out["elapsed_s"] == {
+        "parent": {"median": 60.0, "total": 180.0},
+        "change": {"median": 50.0, "total": 160.0},
+    }
+    assert ("run elapsed_s: parent median 60.0 s, total 180 s; "
+            "change median 50.0 s, total 160 s") in ab.table(out)

@@ -204,19 +204,84 @@ def test_cli_etl_scans_archives_once(spark, zip_dir, tmp_path, capsys):
 
 def test_run_pipeline_dissolve_runs_on_every_core(spark, zip_dir):
     """The dissolve exchange is an explicit repartition at the session's
-    default parallelism; AQE does not coalesce that shuffle origin, so
-    the groups spread over every core instead of one Python task."""
+    default parallelism on the scenario key; AQE does not coalesce that
+    shuffle origin, so the groups spread over every core instead of one
+    Python task.  It is the only exchange between the decoded cells and
+    the grouped kernel: the cell dedupe reuses its partitioning."""
     import re
 
     cells, _ = load_cells_from_zips(spark, zip_dir)
     plan = run_pipeline(cells)._jdf.queryExecution().executedPlan().toString()
     exchanges = re.findall(
-        r"Exchange hashpartitioning\(species#\d+, threshold#\d+, source#\d+, "
+        r"Exchange hashpartitioning\(species#\d+, source#\d+, "
         r"year#\d+, scenario#\d+, (\d+)\), (\w+)",
         plan,
     )
     n = spark.sparkContext.defaultParallelism
     assert exchanges == [(str(n), "REPARTITION_BY_NUM")], plan
+    between = plan[plan.index("FlatMapGroupsInPandas"):plan.index("MapInPandas")]
+    assert between.count("Exchange") == 1, plan
+
+
+def test_run_pipeline_matches_explode_then_dissolve(spark):
+    """The nested-threshold dissolve equals the explicit form: explode each
+    cell to every threshold it reaches, then dissolve over the 5-column
+    key.  Unsorted, repeated thresholds; one cell in two members of one
+    scenario with different values (the max wins); a threshold that keeps
+    no cell of a scenario gives no row for it."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from species_range_data_pipeline_spark.operators.polygonize import dissolve
+    from species_range_data_pipeline_spark.pipeline.species import (
+        parse_scenario_attributes,
+    )
+
+    affine = {"xll": XLL, "yll": YLL, "cellsize": CS, "nrows": NROWS}
+    g = _grid(4)
+    rows = [
+        {"file": "sp-a__25_current.asc", "row": r, "col": c, "value": float(g[r, c]), **affine}
+        for r in range(NROWS) for c in range(NCOLS) if g[r, c] != -9999.0
+    ]
+    # the same scenario's second member: one shared cell, higher value
+    rows.append({"file": "sp-a__75_current.asc", "row": 2, "col": 3, "value": 0.9, **affine})
+    rows.append({"file": "sp-a__75_current.asc", "row": 2, "col": 3, "value": 0.1, **affine})
+    # a future scenario whose cells never reach 0.75
+    rows += [
+        {"file": "sp-b__25_gfdl_rcp45_y2080.asc", "row": r, "col": c, "value": v, **affine}
+        for r, c, v in ((0, 0, 0.3), (0, 1, 0.6), (1, 1, 0.55), (4, 4, 0.26))
+    ]
+    cells = spark.createDataFrame(pd.DataFrame(rows))
+    thresholds = [0.75, 0.25, 0.5, 0.5]
+
+    got = run_pipeline(cells, thresholds=thresholds).collect()
+
+    fanned = parse_scenario_attributes(cells).withColumn(
+        "threshold", F.explode(F.array(*[F.lit(t) for t in (0.25, 0.5, 0.75)]))
+    ).where(F.col("value") >= F.col("threshold"))
+    fanned = fanned.withColumn(
+        "threshold", (F.col("threshold") * 100).cast("int").cast("string")
+    )
+    key = ["species", "threshold", "source", "year", "scenario"]
+    want = {
+        tuple(r[k] for k in key): r
+        for r in dissolve(fanned, by=key).collect()
+    }
+    assert ("sp-b", "75", "gfdl", "2080", "rcp45") not in want
+    assert len(want) == 5
+
+    assert {tuple(r[k] for k in key) for r in got} == set(want)
+    for r in got:
+        w = want[tuple(r[k] for k in key)]
+        assert bytes(r.geometry) == bytes(w.geometry)
+        assert (r.area, r.species_id) == (w.area, w.n_parts)
+    # the max wins: (2, 3) is kept at 0.75 although one duplicate is 0.1
+    sp_a_75 = want[("sp-a", "75", "vtech", "2020", "current")]
+    assert sp_a_75.n_cells == int((g >= 0.75).sum()) + int(g[2, 3] < 0.75)
+    # sid follows the key order
+    assert [r.sid for r in sorted(got, key=lambda r: tuple(r[k] for k in key))] == list(
+        range(len(got))
+    )
 
 
 def test_full_artifact_cycle_mixed_raster_formats(spark, tmp_path):

@@ -238,3 +238,18 @@ def test_every_self_pinned_query_has_an_independent_golden():
         tree = ast.parse((root / path).read_text())
         fns = {n.name for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)}
         assert test_name in fns, f"{name}: golden {ref} no longer exists"
+
+
+def test_pandas_udf_lanes_declare_their_kind_by_type_hints(spark):
+    """The scalar and grouped-aggregate pandas UDFs take their kind from
+    type hints: building their lanes raises no ``PandasUDFType``
+    deprecation warning."""
+    import warnings
+
+    queries = registry.all_queries()
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        for name in ("delta_read_dv", "window_udaf_ewma", "emb_label_centroids"):
+            queries[name](spark, SF_CORRECT)
+    deprecated = [str(w.message) for w in caught if "pandas UDF type" in str(w.message)]
+    assert deprecated == []

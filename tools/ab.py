@@ -18,8 +18,11 @@ stay in the record and are counted, never dropped.
 
 Per metric, the output gives each side's median and quartiles, the pairs
 the change wins (ties count for neither side), the change/parent ratio of
-medians, and whether that ratio is within the metric's bound.  The last
-stdout line is one JSON object that holds every run.
+medians, and whether that ratio is within the metric's bound.  Each run
+also records its ``elapsed_s`` (the whole perfbench process, failed runs
+included); the output gives each side's median and total, so a change can
+show it does not lengthen a benchmark run.  The last stdout line is one
+JSON object that holds every run.
 """
 
 from __future__ import annotations
@@ -31,6 +34,7 @@ import subprocess
 import sys
 import tarfile
 import tempfile
+import time
 from pathlib import Path
 
 PAIRS = 10
@@ -53,8 +57,10 @@ def run(tree: Path, bench: dict, workload: str, seed: int) -> dict:
     """One perfbench run; a record with ``ok`` False and a ``why`` on failure."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(bench["run_seconds"]), "--trace", "0"]
+    t0 = time.perf_counter()
     proc = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
-    rec = {"seed": seed, "exit": proc.returncode, "ok": False, "metrics": {}}
+    rec = {"seed": seed, "exit": proc.returncode, "ok": False, "metrics": {},
+           "elapsed_s": time.perf_counter() - t0}
     lines = proc.stdout.strip().splitlines()
     try:
         last = json.loads(lines[-1])
@@ -89,8 +95,13 @@ def summarize(pairs: list[dict], metrics: list[dict]) -> dict:
     a ``change`` run record each; only ``ok`` runs give values."""
     out = {
         "failed": {side: sum(not p[side]["ok"] for p in pairs) for side in ("parent", "change")},
+        "elapsed_s": {},
         "metrics": {},
     }
+    for side in ("parent", "change"):
+        took = [p[side]["elapsed_s"] for p in pairs if "elapsed_s" in p[side]]
+        out["elapsed_s"][side] = ({"median": statistics.median(took), "total": sum(took)}
+                                  if took else None)
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         vals = {side: [p[side]["metrics"][name] for p in pairs
@@ -125,6 +136,9 @@ def table(summary: dict) -> str:
                      f"{r['change_wins']}/{r['pairs']} | {ratio} | {r['within_bound']}")
     f = summary["failed"]
     lines.append(f"failed runs: parent {f['parent']}, change {f['change']}")
+    took = {side: "-" if e is None else f"median {e['median']:.1f} s, total {e['total']:.0f} s"
+            for side, e in summary["elapsed_s"].items()}
+    lines.append(f"run elapsed_s: parent {took['parent']}; change {took['change']}")
     return "\n".join(lines)
 
 
